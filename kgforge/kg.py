@@ -143,31 +143,13 @@ class KnowledgeGraph:
         mentions, _ = normalize.validate_attributes(mentions, self.ontology)
         mentions = mentions.persist()
         raw_edges = raw_edges.persist()
-        endpoint_names = (
-            mentions.select("label", "key")
-            .unionByName(
-                raw_edges.select(
-                    F.col("src_label").alias("label"),
-                    F.col("src_key").alias("key"),
-                )
-            )
-            .unionByName(
-                raw_edges.select(
-                    F.col("dst_label").alias("label"),
-                    F.col("dst_key").alias("key"),
-                )
-            )
-        )
-        links = link.link_map(endpoint_names).persist()
+        links = link.link_map(link.endpoint_names(mentions, raw_edges)).persist()
         mentions_c, edges_c = materialize.apply_link_map(
             mentions, raw_edges, links
         )
-        key_attr = {
-            label: spec["unique"][0]
-            for label, spec in self._compiled["entities"].items()
-            if spec["unique"]
-        }
-        nodes = materialize.build_nodes(mentions_c, key_attr).localCheckpoint()
+        nodes = materialize.build_nodes(
+            mentions_c, self.ontology.key_attrs()
+        ).localCheckpoint()
         edges = materialize.build_edges(edges_c, nodes).localCheckpoint()
         nodes.write.mode("overwrite").parquet(self.nodes_path)
         edges.write.mode("overwrite").parquet(self.edges_path)
@@ -1590,12 +1572,9 @@ class KnowledgeGraph:
     def export_falkordb(self, export_dir: str) -> None:
         from kgforge.sinks.falkordb_export import export_cypher
 
-        key_attr = {
-            label: spec["unique"][0]
-            for label, spec in self._compiled["entities"].items()
-            if spec["unique"]
-        }
-        export_cypher(self.nodes(), self.edges(), key_attr, export_dir)
+        export_cypher(
+            self.nodes(), self.edges(), self.ontology.key_attrs(), export_dir
+        )
 
     def delete(self) -> None:
         """Drop the graph (kg.py delete parity)."""

@@ -267,6 +267,15 @@ class Ontology:
         self.relations = [r for r in self.relations if r.label not in bad_labels]
         return self
 
+    def key_attrs(self) -> dict[str, str]:
+        """label -> the attribute a node's key fills (its first unique one);
+        labels without a unique attribute are left out."""
+        return {
+            e.label: e.unique_attributes()[0].name
+            for e in self.entities
+            if e.unique_attributes()
+        }
+
     def validate_entities(self) -> bool:
         """True iff every entity has >=1 unique attribute (ontology.py:229-253)."""
         return all(len(e.unique_attributes()) > 0 for e in self.entities)

@@ -160,10 +160,10 @@ IR_RELATION_TYPE = (
 def compile_rules(onto: Ontology) -> dict:
     """Ontology -> picklable rule set for the extraction UDF closure."""
     entities = {}
+    key_attrs = onto.key_attrs()
     for e in onto.entities:
-        uniq = e.unique_attributes()
         entities[e.label] = {
-            "key_attr": uniq[0].name if uniq else "",
+            "key_attr": key_attrs.get(e.label, ""),
             "attrs": {a.name: a.type for a in e.attributes},
         }
     relations = []

@@ -197,6 +197,17 @@ def candidate_pairs(names: DataFrame, max_bucket: int = 10_000) -> DataFrame:
     return scored
 
 
+def endpoint_names(mentions: DataFrame, raw_edges: DataFrame) -> DataFrame:
+    """(label, key) of every mention and of both ends of every edge: the
+    name set `link_map` links, so an edge endpoint never seen as a mention
+    still gets a canonical key."""
+    return mentions.select("label", "key").unionByName(
+        raw_edges.select(F.col("src_label").alias("label"), F.col("src_key").alias("key"))
+    ).unionByName(
+        raw_edges.select(F.col("dst_label").alias("label"), F.col("dst_key").alias("key"))
+    )
+
+
 def link_map(mentions: DataFrame, key_col: str = "key") -> DataFrame:
     """mentions(label, key, ...) -> (label, key, canon_key) for EVERY distinct
     surface form (identity rows included, so downstream joins are total).

@@ -28,25 +28,7 @@ from pyspark.sql import functions as F
 from kgforge.ontology import Ontology
 from kgforge.operators import extract, link, materialize, normalize
 from kgforge.plans.lineage import RunContext
-from kgforge.sources.html import extract_text_udf
-
-
-def _text_expr(df: DataFrame, reuse_text_col: bool):
-    """The stage-01 text column: bs4-parity extraction from `html` when the
-    page has html (the byte-identical-per-url invariant); pages without
-    html (text-only loaders, pre-extracted corpora) keep their `text`.
-    `reuse_text_col=True` skips the UDF entirely when a trusted text column
-    exists (benchmark/entry paths)."""
-    if reuse_text_col and "text" in df.columns:
-        return F.col("text")
-    extracted = extract_text_udf(F.col("html"))
-    if "text" in df.columns:
-        return (
-            F.when(F.col("html").isNotNull(), extracted)
-            .otherwise(F.col("text"))
-            .alias("text")
-        )
-    return extracted.alias("text")
+from kgforge.sources.html import text_expr
 
 
 def build_graph(
@@ -69,18 +51,17 @@ def build_graph(
     html-dies-early column-pruning contract).
     """
     rules = extract.compile_rules(onto)
-    key_attr_by_label = {
-        label: spec["key_attr"]
-        for label, spec in rules["entities"].items()
-        if spec["key_attr"]
-    }
     df = pages
     if lang_filter:
         df = df.filter(F.col("lang").isin(lang_filter))
     html_keep = ["html"] if wrappers else []
-    text_df = df.select(
-        "url", "warc_ts", _text_expr(df, reuse_text_col), "lang", *html_keep
+    # reuse_text_col=True skips the UDF entirely when a trusted text column
+    # exists (benchmark/entry paths)
+    text = (
+        F.col("text") if reuse_text_col and "text" in df.columns
+        else text_expr(df)
     )
+    text_df = df.select("url", "warc_ts", text, "lang", *html_keep)
     # persist at the Python-UDF boundary: IR feeds both explode branches and
     # every downstream consumer — without this the bs4+extraction UDF chain
     # re-runs once per consumer (the single biggest wall-clock factor here)
@@ -102,16 +83,11 @@ def build_graph(
     mentions, _quar = normalize.validate_attributes(mentions, onto)
     mentions = mentions.persist()
     raw_edges = raw_edges.persist()
-    endpoint_names = mentions.select("label", "key").unionByName(
-        raw_edges.select(F.col("src_label").alias("label"), F.col("src_key").alias("key"))
-    ).unionByName(
-        raw_edges.select(F.col("dst_label").alias("label"), F.col("dst_key").alias("key"))
-    )
     # link_map's CC fixpoint runs eagerly (localCheckpoint per iteration);
     # its output is consumed once per endpoint side — persist the small map
-    links = link.link_map(endpoint_names).persist()
+    links = link.link_map(link.endpoint_names(mentions, raw_edges)).persist()
     mentions_c, edges_c = materialize.apply_link_map(mentions, raw_edges, links)
-    nodes = materialize.build_nodes(mentions_c, key_attr_by_label).persist()
+    nodes = materialize.build_nodes(mentions_c, onto.key_attrs()).persist()
     edges = materialize.build_edges(edges_c, nodes)
     triples = materialize.triples_view(edges)
     persisted = [ir_df, mentions, raw_edges, links, nodes]
@@ -145,7 +121,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str | None = None,
     lang_filter: list[str] | None = None,
-    reuse_text_col: bool = False,
     wrappers: list | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline; returns dict of output DataFrames.
@@ -160,11 +135,6 @@ def run_pipeline(
         else RunContext(spark, out_dir)
     )
     rules = extract.compile_rules(onto)
-    key_attr_by_label = {
-        label: spec["key_attr"]
-        for label, spec in rules["entities"].items()
-        if spec["key_attr"]
-    }
 
     # ---- stage 1: text extraction (M0) --------------------------------
     def build_text():
@@ -172,10 +142,7 @@ def run_pipeline(
         if lang_filter:
             df = df.filter(F.col("lang").isin(lang_filter))
         html_keep = ["html"] if wrappers else []
-        out = df.select(
-            "url", "warc_ts", _text_expr(df, reuse_text_col), "lang",
-            *html_keep,
-        )
+        out = df.select("url", "warc_ts", text_expr(df), "lang", *html_keep)
         return out.withColumn("url_host", F.parse_url("url", F.lit("HOST")))
 
     # repartition on full url, not url_host: extraction is per-row, and a
@@ -235,16 +202,7 @@ def run_pipeline(
 
     # ---- stage 4: entity linking (M4: J8 + J9) ------------------------
     def build_links():
-        endpoint_names = mentions_df.select("label", "key").unionByName(
-            raw_edges_df.select(
-                F.col("src_label").alias("label"), F.col("src_key").alias("key")
-            )
-        ).unionByName(
-            raw_edges_df.select(
-                F.col("dst_label").alias("label"), F.col("dst_key").alias("key")
-            )
-        )
-        return link.link_map(endpoint_names)
+        return link.link_map(link.endpoint_names(mentions_df, raw_edges_df))
 
     links_df = ctx.run_stage("05_links", build_links)
 
@@ -253,7 +211,7 @@ def run_pipeline(
         mentions_c, _ = materialize.apply_link_map(
             mentions_df, raw_edges_df, links_df
         )
-        return materialize.build_nodes(mentions_c, key_attr_by_label)
+        return materialize.build_nodes(mentions_c, onto.key_attrs())
 
     nodes_df = ctx.run_stage("06_nodes", build_nodes)
 

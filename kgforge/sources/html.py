@@ -40,6 +40,7 @@ import re
 from html.parser import HTMLParser
 
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -121,6 +122,21 @@ def html_to_text(html: str | bytes) -> str:
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """Arrow-batched extraction UDF over a binary/string `html` column."""
     return html.map(lambda h: None if h is None else html_to_text(h))
+
+
+def text_expr(df: DataFrame):
+    """The stage-01 text column, shared by the batch and streaming paths:
+    bs4-parity extraction from `html` when the page has html (the
+    byte-identical-per-url invariant); pages without html (text-only
+    loaders, pre-extracted corpora) keep their `text`."""
+    extracted = extract_text_udf(F.col("html"))
+    if "text" in df.columns:
+        return (
+            F.when(F.col("html").isNotNull(), extracted)
+            .otherwise(F.col("text"))
+            .alias("text")
+        )
+    return extracted.alias("text")
 
 
 def with_extracted_text(pages_df, html_col: str = "html", out_col: str = "text"):

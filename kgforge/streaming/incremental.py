@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from kgforge.ontology import Ontology
 from kgforge.operators import extract, normalize
-from kgforge.sources.html import extract_text_udf
+from kgforge.sources.html import text_expr
 
 
 def stream_extract(
@@ -67,13 +67,7 @@ def stream_extract(
     def process_batch(batch_df: DataFrame, batch_id: int):
         html_keep = ["html"] if wrappers else []
         text_df = batch_df.select(
-            "url",
-            "warc_ts",
-            F.coalesce(
-                "text", extract_text_udf(F.col("html"))
-            ).alias("text"),
-            "lang",
-            *html_keep,
+            "url", "warc_ts", text_expr(batch_df), "lang", *html_keep
         )
         ir = extract.extract_ir(
             text_df,

@@ -249,3 +249,41 @@ def test_moments_stream_matches_batch_and_replay_overwrites(spark, workdir):
     q = moments_stream(spark, src, schema, state, ckpt, "grp", "value")
     q.awaitTermination(120)
     assert _merged() == batch
+
+
+def test_stream_text_rule_matches_batch(spark, corpus, workdir, monkeypatch):
+    """A page whose stored `text` disagrees with its `html`: the stream must
+    extract from html exactly as batch stage 01 does, so its mentions equal
+    batch 03_mentions."""
+    from kgforge.plans.pipeline import run_pipeline
+
+    onto = movies_ontology()
+    pages, _, _ = corpus_to_spark(spark, corpus)
+    rows = pages.limit(6).collect()
+    # each page carries the text of the next one (a stale text column)
+    stale = [
+        (r.url, r.warc_ts, r.html, rows[(i + 1) % len(rows)].text, r.lang)
+        for i, r in enumerate(rows)
+    ]
+    pages_dir = f"{workdir}/pages_stale"
+    spark.createDataFrame(stale, pages.schema).coalesce(1).write.parquet(
+        f"{pages_dir}/c1"
+    )
+
+    q = stream_extract(
+        spark, pages_dir, onto, f"{workdir}/stream_out", f"{workdir}/ckpt"
+    )
+    q.awaitTermination(120)
+    # the batch side only needs stages 01-03: stop the pipeline there
+    monkeypatch.setenv("KGFORGE_FAIL_AFTER_STAGE", "03_mentions")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(
+            spark, spark.read.parquet(f"{pages_dir}/c1"), onto,
+            f"{workdir}/batch",
+        )
+
+    key = ["url", "label", "key"]
+    m_stream = spark.read.parquet(f"{workdir}/stream_out/mentions")
+    m_batch = spark.read.parquet(f"{workdir}/batch/03_mentions")
+    got = {tuple(r) for r in m_stream.select(*key).collect()}
+    assert got and got == {tuple(r) for r in m_batch.select(*key).collect()}
