@@ -1,11 +1,11 @@
 """Session-lifetime tracking for persisted intermediates.
 
 Operators that persist a DataFrame consumed by several joins (LSH band
-bases, link candidate bands) cannot unpersist it before returning — the
-result is still lazy. In a long-lived session those cached blocks would
-accumulate across invocations (ADVICE r01). Operators therefore register
-handles here, and callers (pipeline cleanup, bench harness, tests) call
-`release_cached()` once their results are materialized.
+bases) cannot unpersist it before returning — the result is still lazy.
+In a long-lived session those cached blocks would accumulate across
+invocations (ADVICE r01). Operators therefore register handles here, and
+callers (pipeline cleanup, bench harness, tests) call `release_cached()`
+once their results are materialized.
 """
 
 from __future__ import annotations

@@ -12,13 +12,22 @@ iterations overall. Per-iteration ``localCheckpoint`` truncates the
 lineage chain so the plan does not grow with iterations — the standard Spark
 iterative-algorithm hygiene (SURVEY §4).
 
+The edges are symmetrized in one pass (each edge row explodes into both
+directions), so the edge plan — for linking, the whole candidate-pair plan
+with its scoring UDF — is evaluated once, when the persisted symmetric edge
+set first materializes. Each iteration's checkpoint counts, through an
+``Observation`` on the checkpointed plan, the vertices whose component moved
+this round; convergence is read from that count, which the checkpoint's own
+job computes, without joining the new checkpoint to the previous one or
+scanning it again.
+
 Alias clusters are stars/short chains (diameter <= ~4), so this converges in
 2-3 rounds; `max_iter` guards pathological inputs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -33,8 +42,14 @@ def connected_components(
     """
     # symmetrize once; dedup to bound join width
     sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct("src", "dst"),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                )
+            )
+        )
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
         .persist()
@@ -52,6 +67,7 @@ def connected_components(
         )
         stepped = comp.join(nbr_min, on=[comp.id == nbr_min.src], how="left").select(
             "id",
+            F.col("component").alias("prev"),
             F.least(
                 F.col("component"),
                 F.coalesce(F.col("nbr_component"), F.col("component")),
@@ -62,25 +78,20 @@ def connected_components(
         mapping = stepped.select(
             F.col("id").alias("cid"), F.col("component").alias("cc")
         )
-        new_comp = (
+        jumped = F.least(
+            F.col("component"), F.coalesce(F.col("cc"), F.col("component"))
+        )
+        # the checkpoint action itself reports how many vertices moved:
+        # no second pass over the checkpoint, no join to the previous one
+        moved = Observation()
+        comp = (
             stepped.join(mapping, stepped.component == mapping.cid, how="left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("cc"), F.col("component"))
-                ).alias("component"),
-            )
+            .select("id", "prev", jumped.alias("component"))
+            .observe(moved, F.count_if(F.col("component") != F.col("prev")).alias("n"))
+            .drop("prev")
             .localCheckpoint()
         )
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), on="id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
+        if moved.get["n"] == 0:
             break
     sym.unpersist()
     return comp

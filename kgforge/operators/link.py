@@ -8,19 +8,25 @@ that deterministic and distributed (SURVEY §2.3 J8):
 1. distinct (label, name) pairs -> char-3-shingle MinHash signatures
    (vectorized numpy inside a pandas UDF; seeded permutation params, so
    byte-reproducible);
-2. signatures split into bands; ``posexplode`` + self equi-join on
-   (label, band_idx, band_hash) gives candidate pairs — an equi-join
-   realization of a similarity join, so Catalyst shuffles on the band key
-   and never builds the O(n^2) cross product;
+2. one keyed blocking table: the signature's bands plus the token-initials
+   skeleton as one more channel (``band_idx = N_BANDS``), each row keyed
+   (label, band_idx, band_hash). One size-capped self equi-join on that key
+   gives the candidate pairs — an equi-join realization of a similarity
+   join, so Catalyst shuffles on the band key and never builds the O(n^2)
+   cross product;
 3. candidate pairs are verified with exact name-compatibility scoring
    (same last token + compatible first token, or exact case-fold match) plus
-   exact shingle-Jaccard — LSH may overshoot, verification never does;
+   exact shingle-Jaccard — LSH may overshoot, verification never does; each
+   distinct pair is scored once;
 4. each non-canonical surface form links to its best candidate only:
    ``row_number() over (partition by mention order by score desc, freq desc,
    candidate)`` == 1 (SURVEY §2.5 disambiguation window);
 5. the surviving pairs feed connected-components canonicalization (canon.py),
    and the cluster representative is the *most complete identifier* (longest
    name, tie-broken lexicographically) — the reference's coreference rule.
+   Both directions of every pair come from one reference to the scored
+   pairs, and CC symmetrizes its edges the same way, so one link map
+   evaluates the candidate plan (blocking, join, scoring UDF) once.
 """
 
 from __future__ import annotations
@@ -101,7 +107,8 @@ def name_match_score(a: str, b: str) -> float:
             if len(x) > 1:
                 anchor = True
             continue
-        if (len(x) == 1 or len(y) == 1) and x[0] == y[0]:
+        # x[:1], not x[0]: a dot-only token ("Ann . Lee") strips to ""
+        if (len(x) == 1 or len(y) == 1) and x[:1] == y[:1]:
             continue
         return 0.0
     if not anchor:
@@ -112,25 +119,27 @@ def name_match_score(a: str, b: str) -> float:
 
 
 @pandas_udf(DoubleType())
-def match_score_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+def _match_score(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(
         [name_match_score(x, y) for x, y in zip(a, b)], dtype="float64"
     )
 
 
-def _pairs_on(
-    bands: DataFrame, keys: list, max_bucket: int | None = None
-) -> DataFrame:
+# Declared nondeterministic so the optimizer keeps it where it is written:
+# as a deterministic UDF, the `score > 0` filter is pushed below the pair
+# dedup and every pre-dedup duplicate (one per shared band) is scored too.
+match_score_udf = _match_score.asNondeterministic()
+
+
+def _pairs_on(bands: DataFrame, keys: list, max_bucket: int) -> DataFrame:
     """Self equi-join on the blocking keys; buckets larger than max_bucket
     are dropped first. A huge bucket means the key is non-discriminative
     (every "A. D." at crawl scale) — joining it is O(bucket^2) for pairs the
     verifier would reject anyway, so capping bounds worst-case cost without
     touching the discriminative buckets that carry real aliases."""
-    if max_bucket is not None:
-        sizes = bands.groupBy(*keys).agg(F.count("*").alias("_n"))
-        bands = bands.join(
-            sizes.filter(F.col("_n") <= max_bucket).drop("_n"), on=keys
-        )
+    from kgforge.functions.dedup import _cap_buckets
+
+    bands = _cap_buckets(bands, keys, max_bucket)
     left = bands.alias("l")
     right = bands.alias("r")
     cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys] + [
@@ -144,57 +153,50 @@ def _pairs_on(
 
 
 def candidate_pairs(names: DataFrame, max_bucket: int = 10_000) -> DataFrame:
-    """names(label, name, freq) -> verified candidate pairs (label, a, b, score).
+    """names(label, name, ...) -> verified candidate pairs (label, a, b, score).
 
-    Two blocking channels, both equi-joins (never a cross product):
-    1. MinHash-LSH bands over char-3-shingles (catches high-Jaccard variants);
-    2. token-initials skeleton ("Mona I."/"Mona Ivanova" -> "mi|2") — catches
-       abbreviation variants whose shingle Jaccard is too low for LSH.
-    Pairs are emitted once (a < b lexicographically) and then verified
-    exactly, so blocking can only lose pairs, never fabricate them.
+    One keyed blocking table (label, name, band_idx, band_hash): rows
+    0..N_BANDS-1 are the MinHash-LSH bands over char-3-shingles (catch
+    high-Jaccard variants); row N_BANDS hashes the token-initials skeleton
+    ("Mona I."/"Mona Ivanova" -> "mi|2"), which catches abbreviation variants
+    whose shingle Jaccard is too low for LSH. One size-capped self equi-join
+    on its key gives the pairs, never a cross product. Pairs are emitted once
+    (a < b lexicographically) and each distinct pair is scored once, exactly,
+    so blocking can only lose pairs, never fabricate them; a skeleton hash
+    collision only adds a candidate for verification to reject.
+
+    The table is not persisted: both join sides read the one shuffle that
+    caps its buckets (Spark reuses the identical exchange), so the signature
+    UDF runs once per name without a cache to release.
     """
-    sigs = names.withColumn("sig", minhash_udf(F.col("name")))
     rows_per_band = N_HASHES // N_BANDS
-    bands = sigs.select(
-        "label",
-        "name",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-                lambda i: F.slice(
-                    "sig", i * rows_per_band + 1, rows_per_band
-                ),
-            )
-        ).alias("band_idx", "band"),
-    ).withColumn("band_hash", F.xxhash64(F.col("band").cast("string")))
-    # persist: the self-join would otherwise run the signature UDF twice
-    # (tracked; callers release via kgforge.cache.release_cached)
-    from kgforge.cache import persist_tracked
-
-    bands = persist_tracked(bands)
-    lsh_pairs = _pairs_on(
-        bands, ["label", "band_idx", "band_hash"], max_bucket=max_bucket
-    )
-
     toks = F.split(F.lower(F.trim(F.col("name"))), r"\s+")
-    skel = names.select(
+    skel = F.concat_ws(
+        "|",
+        F.concat_ws("", F.transform(toks, lambda t: F.substring(t, 1, 1))),
+        F.size(toks).cast("string"),
+    )
+    lsh = F.transform(
+        F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
+        lambda i: F.xxhash64(
+            F.slice("sig", i * rows_per_band + 1, rows_per_band).cast("string")
+        ),
+    )
+    blocks = names.select(
+        "label", "name", minhash_udf(F.col("name")).alias("sig"), skel.alias("skel")
+    ).select(
         "label",
         "name",
-        F.concat_ws(
-            "|",
-            F.concat_ws("", F.transform(toks, lambda t: F.substring(t, 1, 1))),
-            F.size(toks).cast("string"),
-        ).alias("skel"),
+        F.posexplode(F.concat(lsh, F.array(F.xxhash64("skel")))).alias(
+            "band_idx", "band_hash"
+        ),
     )
-    skel_pairs = _pairs_on(skel, ["label", "skel"], max_bucket=max_bucket)
-
-    pairs = lsh_pairs.unionByName(skel_pairs).dropDuplicates(
-        ["label", "a", "b"]
-    )
-    scored = pairs.withColumn("score", match_score_udf("a", "b")).filter(
+    pairs = _pairs_on(
+        blocks, ["label", "band_idx", "band_hash"], max_bucket
+    ).dropDuplicates(["label", "a", "b"])
+    return pairs.withColumn("score", match_score_udf("a", "b")).filter(
         F.col("score") > 0.0
     )
-    return scored
 
 
 def endpoint_names(mentions: DataFrame, raw_edges: DataFrame) -> DataFrame:
@@ -231,12 +233,18 @@ def link_map(mentions: DataFrame, key_col: str = "key") -> DataFrame:
     # links every compatible full name ("Rosa Xu", "Rosa Xu-Abbott", ...)
     # into a single wrong cluster via CC transitivity.
     freq = names.select("label", F.col("name"), "freq")
+    # both directions from one reference to `pairs`, so the candidate plan
+    # is evaluated once
     directed = (
-        pairs.select("label", F.col("a").alias("m"), F.col("b").alias("cand"), "score")
-        .unionByName(
-            pairs.select(
-                "label", F.col("b").alias("m"), F.col("a").alias("cand"), "score"
-            )
+        pairs.select(
+            "label",
+            "score",
+            F.inline(
+                F.array(
+                    F.struct(F.col("a").alias("m"), F.col("b").alias("cand")),
+                    F.struct(F.col("b").alias("m"), F.col("a").alias("cand")),
+                )
+            ),
         )
         .filter(F.length("cand") >= F.length("m"))
         .join(
@@ -260,20 +268,14 @@ def link_map(mentions: DataFrame, key_col: str = "key") -> DataFrame:
         vid(F.col("label"), F.col("cand")).alias("dst"),
     )
     vertices = names.select(
-        vid(F.col("label"), F.col("name")).alias("id"), "label", "name", "freq"
+        vid(F.col("label"), F.col("name")).alias("id"), "label", "name"
     )
     comp = connected_components(vertices.select("id"), edges)
 
-    labeled = vertices.join(comp, on="id")
-    rep_w = Window.partitionBy("component").orderBy(
-        F.desc(F.length("name")), F.desc("name")
+    # representative: the longest, then lexicographically greatest, member
+    rep = F.max(F.struct(F.length("name"), F.col("name").alias("rep"))).over(
+        Window.partitionBy("component")
     )
-    reps = (
-        labeled.withColumn("rn", F.row_number().over(rep_w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("component"), F.col("name").alias("canon_key"))
-    )
-    return (
-        labeled.join(reps, on="component")
-        .select("label", F.col("name").alias(key_col), "canon_key")
+    return vertices.join(comp, on="id").select(
+        "label", F.col("name").alias(key_col), rep["rep"].alias("canon_key")
     )

@@ -95,7 +95,7 @@ def build_graph(
     def unpersist():
         """Release this graph's cached intermediates (long sessions that
         build many graphs should call this when done with the outputs),
-        including handles tracked inside link/dedup (kgforge.cache)."""
+        including handles operators tracked in kgforge.cache."""
         from kgforge.cache import release_cached
 
         for df in persisted:
