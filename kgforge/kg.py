@@ -20,13 +20,17 @@ pipeline and updated by MERGE-semantics upserts here.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kgforge.ontology import Ontology
+from kgforge.operators.materialize import EDGES_SCHEMA, NODES_SCHEMA
 
 
 class KnowledgeGraph:
@@ -40,7 +44,7 @@ class KnowledgeGraph:
     ):
         """`iceberg_tables=(nodes_table, edges_table)` routes upserts
         through Iceberg MERGE INTO (sinks/iceberg.py) instead of the
-        parquet join-rewrite — requires a configured Iceberg catalog on
+        parquet table rewrite — requires a configured Iceberg catalog on
         the session; same MERGE semantics, atomic per-batch commits."""
         if not ontology.validate_entities():
             raise ValueError(
@@ -201,9 +205,10 @@ class KnowledgeGraph:
     # ------------------------------------------------------------ upserts
     #
     # Parquet has no MERGE INTO, so an upsert rewrites the table; the batch
-    # APIs amortize that: N rows = ONE join + ONE write (the per-row
-    # wrappers below keep reference API parity but cost a full rewrite per
-    # call — never loop them; pass the batch).
+    # APIs amortize that: N rows = ONE shuffle of the batch with the table
+    # rows it touches + ONE write (`_merge_rewrite`; the per-row wrappers
+    # below keep reference API parity but cost a full rewrite per call —
+    # never loop them; pass the batch).
 
     @staticmethod
     def _overlay(old_col: str, new_col: str):
@@ -220,11 +225,64 @@ class KnowledgeGraph:
             new_col,
         )
 
-    def _node_batch(self, rows: list[tuple[str, dict]]) -> DataFrame:
-        """Validated, key-collapsed node batch DF (last-wins in input
-        order, matching sequential MERGE calls). Shared by the parquet
-        join-rewrite and the Iceberg MERGE source — and by the equivalence
-        property test that pins the two paths to each other."""
+    def _merge_rewrite(
+        self,
+        path: str,
+        existing: DataFrame | None,
+        batch: DataFrame,
+        keycols: list[str],
+        idcols: list[str],
+        idents: dict[tuple, dict],
+    ) -> None:
+        """Overwrite the table at `path` with `existing` MERGEd with the
+        key-unique `batch`, shuffling only the table rows the batch can
+        touch.
+
+        The key columns hash the identity columns `idcols` (`node_id` is
+        xxhash64(label, key), an edge's ids hash its endpoints), and
+        `idents` is keyed by the batch's identity tuples in `idcols` order. A
+        table row can share a key with the batch only if each of its
+        identity values occurs in the batch, so one `isin` per column
+        splits the table: `touched` rows (a small superset of the matches)
+        are unioned with the batch (`_new = 1`, table rows `_new = 0`) and
+        grouped by `keycols`; the batch row's columns win
+        (`max_by(.., _new)`) and, when both are present, `props` is the
+        `SET +=` overlay of the two. Every other row passes straight
+        through to the write. The localCheckpoint materializes the result
+        before the overwrite deletes the files it was read from.
+        """
+        if existing is None:
+            batch.write.mode("overwrite").parquet(path)
+            return
+        touched = F.coalesce(
+            functools.reduce(operator.and_, (
+                F.col(c).isin(sorted({ident[i] for ident in idents}))
+                for i, c in enumerate(idcols)
+            )),
+            F.lit(False),
+        )
+        new = F.col("_new")
+        both = existing.where(touched).withColumn("_new", F.lit(0)).unionByName(
+            batch.withColumn("_new", F.lit(1))
+        )
+        merged = both.groupBy(*keycols).agg(
+            *(F.max_by(c, new).alias(c)
+              for c in existing.columns if c not in keycols),
+            F.min_by("props", new).alias("_old"),
+            F.count(new).alias("_n"),
+        ).withColumn(
+            "props",
+            F.when(F.col("_n") > 1, self._overlay("_old", "props"))
+            .otherwise(F.col("props")),
+        )
+        out = existing.where(~touched).unionByName(
+            merged.select(*existing.columns)
+        ).localCheckpoint()
+        out.write.mode("overwrite").parquet(path)
+
+    def _node_keyed(self, rows: list[tuple[str, dict]]) -> dict[tuple, dict]:
+        """Validated node rows collapsed to {(label, key): props}, last-wins
+        in input order (matching sequential MERGE calls)."""
         by_key: dict[tuple, dict] = {}
         for label, attributes in rows:
             self._validate(label, attributes)
@@ -233,50 +291,46 @@ class KnowledgeGraph:
             props.update(
                 {k: ("" if v is None else str(v)) for k, v in attributes.items()}
             )
+        return by_key
+
+    def _node_frame(self, keyed: dict[tuple, dict]) -> DataFrame:
+        """Node-table rows (NODES_SCHEMA columns) for keyed nodes."""
         return self.spark.createDataFrame(
-            [(label, key, props) for (label, key), props in by_key.items()],
+            [(label, key, props) for (label, key), props in keyed.items()],
             "label string, key string, props map<string,string>",
         ).select(
             F.xxhash64("label", "key").alias("node_id"), "label", "key", "props"
         )
+
+    def _node_batch(self, rows: list[tuple[str, dict]]) -> DataFrame:
+        """Validated, key-collapsed node batch DF. Shared by the parquet
+        rewrite and the Iceberg MERGE source — and by the equivalence
+        property test that pins the two paths to each other."""
+        return self._node_frame(self._node_keyed(rows))
 
     def add_nodes(self, rows: list[tuple[str, dict]]) -> None:
         """Batch MERGE (n:label {unique}) SET n += {...} for
         [(label, attributes), ...] (extract_data_step.py:222).
 
         Validation is driver-side per row (raises on the first bad row,
-        before any write); the upsert itself is one anti-join (untouched
-        nodes) + one inner join (prop overlay) + one union of fresh rows.
-        Duplicate keys within the batch collapse last-wins in input order,
-        matching sequential MERGE calls.
+        before any write); the upsert itself is one `_merge_rewrite`: one
+        shuffle of the batch with the table rows sharing its labels and
+        keys, then one write. Duplicate keys within the batch collapse
+        last-wins in input order, matching sequential MERGE calls.
         """
         if not rows:
             return
-        batch = self._node_batch(rows)
+        keyed = self._node_keyed(rows)
+        batch = self._node_frame(keyed)
         if self.iceberg_tables is not None:
             from kgforge.sinks.iceberg import merge_nodes
 
             merge_nodes(self.spark, batch, self.iceberg_tables[0])
             return
-        existing = self.nodes()
-        if existing is None:
-            batch.write.mode("overwrite").parquet(self.nodes_path)
-            return
-        kept = existing.join(batch.select("node_id"), "node_id", "left_anti")
-        updated = (
-            existing.withColumnRenamed("props", "old_props")
-            .join(
-                batch.select("node_id", F.col("props").alias("new_props")),
-                on="node_id",
-            )
-            .select(
-                "node_id", "label", "key",
-                self._overlay("old_props", "new_props").alias("props"),
-            )
+        self._merge_rewrite(
+            self.nodes_path, self.nodes(), batch, ["node_id"],
+            ["label", "key"], keyed,
         )
-        fresh = batch.join(existing.select("node_id"), "node_id", "left_anti")
-        out = kept.unionByName(updated).unionByName(fresh).localCheckpoint()
-        out.write.mode("overwrite").parquet(self.nodes_path)
 
     def add_node(self, label: str, attributes: dict) -> None:
         """Single-row wrapper (reference API parity)."""
@@ -288,12 +342,13 @@ class KnowledgeGraph:
         ...]. Returns how many edges were written; rows whose endpoint
         nodes don't exist are silently dropped — the reference's Cypher
         MATCH semantics (extract_data_step.py:227-269). Existence is ONE
-        semi-join per endpoint side, not per-row scans.
+        filtered scan for the batch's distinct endpoints (`_live_edges`),
+        not per-row scans; the upsert is one `_merge_rewrite` on
+        (src_id, label, dst_id).
 
-        `count_valid=False` is the bulk fast path: it skips the per-batch
-        count job used only to report how many rows survived the endpoint
-        MATCH, and returns -1 (unknown) instead — one Spark job fewer per
-        batch for callers that don't consume the count.
+        `count_valid=False` returns -1 (unknown) instead of the count. The
+        count is the size of the resolved batch, known without a Spark job,
+        so both settings run the same jobs.
         """
         if not rows:
             return 0
@@ -301,39 +356,20 @@ class KnowledgeGraph:
         nodes = self.nodes()
         if nodes is None:
             return 0
-        batch = self._edge_batch(keyed, nodes).localCheckpoint()
-        n_valid = batch.count() if count_valid else -1
-        if n_valid == 0:
-            return 0
+        live = self._live_edges(keyed, nodes)
+        n_valid = len(live) if count_valid else -1
+        if not live:
+            return n_valid
+        batch = self._edge_frame(live)
         if self.iceberg_tables is not None:
             from kgforge.sinks.iceberg import merge_edges
 
             merge_edges(self.spark, batch, self.iceberg_tables[1])
             return n_valid
-        existing = self.edges()
-        if existing is None:
-            batch.write.mode("overwrite").parquet(self.edges_path)
-            return n_valid
-        keycols = ["src_id", "label", "dst_id"]
-        kept = existing.join(batch.select(*keycols), keycols, "left_anti")
-        # SET r += : the matched edge keeps its old props under the new ones
-        # (previously the old row was dropped wholesale, losing properties
-        # the new row didn't mention)
-        updated = (
-            existing.withColumnRenamed("props", "old_props")
-            .join(
-                batch.select(*keycols, F.col("props").alias("new_props")),
-                on=keycols,
-            )
-            .select(
-                *keycols,
-                self._overlay("old_props", "new_props").alias("props"),
-                "src_label", "src_key", "dst_label", "dst_key",
-            )
+        self._merge_rewrite(
+            self.edges_path, self.edges(), batch, ["src_id", "label", "dst_id"],
+            ["label", "src_label", "src_key", "dst_label", "dst_key"], live,
         )
-        fresh = batch.join(existing.select(*keycols), keycols, "left_anti")
-        out = kept.unionByName(updated).unionByName(fresh).localCheckpoint()
-        out.write.mode("overwrite").parquet(self.edges_path)
         return n_valid
 
     def _edge_keyed(self, rows: list[tuple]) -> dict[tuple, dict]:
@@ -367,44 +403,46 @@ class KnowledgeGraph:
             )
         return by_key
 
+    def _live_edges(
+        self, keyed: dict[tuple, dict], nodes: DataFrame
+    ) -> dict[tuple, dict]:
+        """The entries of `keyed` whose two endpoint nodes exist in
+        `nodes` (Cypher MATCH semantics). One Spark job collects the
+        (label, key) of every node whose key is an endpoint key of the
+        batch; the batch is then filtered in Python by exact
+        (label, key) pair."""
+        ends = {k[1:3] for k in keyed} | {k[3:5] for k in keyed}
+        keys = sorted({key for _, key in ends})
+        hits = nodes.where(F.col("key").isin(keys)).select("label", "key")
+        found = {(r["label"], r["key"]) for r in hits.collect()}
+        return {
+            k: props for k, props in keyed.items()
+            if k[1:3] in found and k[3:5] in found
+        }
+
+    def _edge_frame(self, keyed: dict[tuple, dict]) -> DataFrame:
+        """Edge-table rows (EDGES_SCHEMA columns) for already-resolved
+        keyed edges."""
+        return self.spark.createDataFrame(
+            [k + (props,) for k, props in keyed.items()],
+            "label string, src_label string, src_key string, "
+            "dst_label string, dst_key string, props map<string,string>",
+        ).select(
+            F.xxhash64("src_label", "src_key").alias("src_id"),
+            "label",
+            F.xxhash64("dst_label", "dst_key").alias("dst_id"),
+            "props", "src_label", "src_key", "dst_label", "dst_key",
+        )
+
     def _edge_batch(
         self, keyed: dict[tuple, dict], nodes: DataFrame
     ) -> DataFrame:
         """Key-collapsed edge batch with both endpoints resolved against
-        `nodes` (rows with a missing endpoint drop out via the two
-        semi-joins — Cypher MATCH semantics). Shared by the parquet
-        join-rewrite, the Iceberg MERGE source, and the equivalence
-        property test."""
-        batch = self.spark.createDataFrame(
-            [k + (props,) for k, props in keyed.items()],
-            "label string, src_label string, src_key string, "
-            "dst_label string, dst_key string, props map<string,string>",
-        )
-        node_keys = nodes.select("label", "key")
-        return (
-            batch.join(
-                node_keys.select(
-                    F.col("label").alias("src_label"),
-                    F.col("key").alias("src_key"),
-                ),
-                on=["src_label", "src_key"],
-                how="left_semi",
-            )
-            .join(
-                node_keys.select(
-                    F.col("label").alias("dst_label"),
-                    F.col("key").alias("dst_key"),
-                ),
-                on=["dst_label", "dst_key"],
-                how="left_semi",
-            )
-            .select(
-                F.xxhash64("src_label", "src_key").alias("src_id"),
-                "label",
-                F.xxhash64("dst_label", "dst_key").alias("dst_id"),
-                "props", "src_label", "src_key", "dst_label", "dst_key",
-            )
-        )
+        `nodes` (rows with a missing endpoint drop out — Cypher MATCH
+        semantics). The same resolved batch feeds the parquet rewrite and
+        the Iceberg MERGE source; the equivalence property test uses this
+        to pin the two paths to each other."""
+        return self._edge_frame(self._live_edges(keyed, nodes))
 
     def add_edge(
         self,
@@ -425,21 +463,45 @@ class KnowledgeGraph:
         )
 
     # ------------------------------------------------------------- reads
-    def nodes(self) -> DataFrame | None:
-        try:
-            if self.iceberg_tables is not None:
-                return self.spark.table(self.iceberg_tables[0])
-            return self.spark.read.parquet(self.nodes_path)
-        except Exception:
+    def _table(
+        self, path: str, schema: StructType, iceberg_name: str | None
+    ) -> DataFrame | None:
+        """The table at `path` read with its pinned schema (no footer
+        inference job), or None when it does not exist yet. A path that
+        exists but is not a table directory raises instead of passing
+        for "no graph yet", so an upsert cannot overwrite it.
+
+        Existence is asked of the Hadoop filesystem Spark itself resolves
+        `path` with (the session's `fs.defaultFS` decides where a path
+        without a scheme lives), so the check and the read or write that
+        follows see the same table; it runs no Spark job."""
+        if iceberg_name is not None:
+            if not self.spark.catalog.tableExists(iceberg_name):
+                return None
+            return self.spark.table(iceberg_name)
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(
+            self.spark._jsparkSession.sessionState().newHadoopConf()
+        )
+        if not fs.exists(hpath):
             return None
+        if not fs.getFileStatus(hpath).isDirectory():
+            raise ValueError(f"{path} is not a table directory")
+        return self.spark.read.schema(schema).parquet(path)
+
+    def nodes(self) -> DataFrame | None:
+        """The nodes table (NODES_SCHEMA), or None when no graph exists."""
+        return self._table(
+            self.nodes_path, NODES_SCHEMA,
+            self.iceberg_tables and self.iceberg_tables[0],
+        )
 
     def edges(self) -> DataFrame | None:
-        try:
-            if self.iceberg_tables is not None:
-                return self.spark.table(self.iceberg_tables[1])
-            return self.spark.read.parquet(self.edges_path)
-        except Exception:
-            return None
+        """The edges table (EDGES_SCHEMA), or None when no edge exists."""
+        return self._table(
+            self.edges_path, EDGES_SCHEMA,
+            self.iceberg_tables and self.iceberg_tables[1],
+        )
 
     def match(self, src_label=None, relation=None, dst_label=None) -> DataFrame:
         """MATCH (a:src)-[:rel]->(b:dst) (EP3 execution surface)."""
@@ -453,7 +515,7 @@ class KnowledgeGraph:
         """Replay reference-emitted write Cypher (`MERGE (n:L {..}) SET
         n += {..}` / `MATCH .. MATCH .. MERGE (s)-[r:R]->(t) ..`,
         ref extract_data_step.py:218-266) through the batch upserts —
-        N queries become one join-rewrite per table per segment. See
+        N queries become one table rewrite per table per segment. See
         plans/cypher_write.py for grammar, segmenting, and the
         endpoint-keying deviation note."""
         from kgforge.plans.cypher_write import execute_writes

@@ -25,6 +25,33 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+_PROPS = StructField("props", MapType(StringType(), StringType()))
+
+# The graph tables' on-disk schemas: `build_nodes`/`build_edges` and the
+# KnowledgeGraph upserts write exactly these columns, and the facade reads
+# them back with the schema pinned (no per-read footer inference).
+NODES_SCHEMA = StructType([
+    StructField("node_id", LongType()),
+    StructField("label", StringType()),
+    StructField("key", StringType()),
+    _PROPS,
+])
+EDGES_SCHEMA = StructType([
+    StructField("src_id", LongType()),
+    StructField("label", StringType()),
+    StructField("dst_id", LongType()),
+    _PROPS,
+    *(StructField(c, StringType())
+      for c in ("src_label", "src_key", "dst_label", "dst_key")),
+])
 
 
 def _lww_props(
@@ -100,7 +127,7 @@ def apply_link_map(
 def build_nodes(mentions: DataFrame, key_attr_by_label: dict[str, str]) -> DataFrame:
     """mentions(url, warc_ts, label, key, attributes) -> nodes table.
 
-    nodes(node_id, label, key, props map<string,string>)
+    nodes(node_id, label, key, props map<string,string>) = NODES_SCHEMA
     """
     lww = _lww_props(
         mentions, ["label", "key"], ["warc_ts", "url"]
@@ -129,7 +156,8 @@ def build_nodes(mentions: DataFrame, key_attr_by_label: dict[str, str]) -> DataF
 
 
 def build_edges(raw_edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """A2 dedup + J1 endpoint resolution -> edges(src_id, label, dst_id, props).
+    """A2 dedup + J1 endpoint resolution -> edges(src_id, label, dst_id, props,
+    src_label, src_key, dst_label, dst_key) = EDGES_SCHEMA.
 
     Inner joins reproduce the reference's drop-if-endpoint-missing semantics.
     """

@@ -14,7 +14,7 @@ verbatim. Supported shapes (the ONLY ones the reference generates):
 `execute_writes` parses a batch and replays it through
 KnowledgeGraph.add_nodes / add_edges — identical MERGE / `SET +=`
 semantics (key = the ontology's unique attributes, matched-edge props
-overlay), but N queries collapse into ONE join-rewrite per table per
+overlay), but N queries collapse into ONE table rewrite per table per
 segment instead of N round-trips: at reference scale each LLM call emits
 dozens of MERGEs and a web-scale corpus emits billions, so per-query
 writes are the non-distributed anti-pattern. Sequential visibility is
@@ -214,7 +214,7 @@ def execute_writes(
     (see module docstring). Returns counters:
     {"nodes": parsed node queries, "edges": parsed edge queries,
      "segments": flush segments, "edges_written": sum of add_edges
-     counts, or -1 when count_valid=False (the bulk fast path)}.
+     counts, or -1 when count_valid=False}.
     """
     parsed = [parse_write(q) for q in queries]
     # ontology validation before any IO, same all-or-nothing contract

@@ -3,7 +3,7 @@
 The engine's storage contract is Iceberg at cluster scale: `MERGE INTO`
 node/edge upserts, snapshot-based resume, `bucket(url_host)` layouts. This
 container ships no Iceberg runtime jar, so the KnowledgeGraph facade
-defaults to the parquet join-rewrite path (kg.add_nodes/add_edges) with
+defaults to the parquet rewrite path (kg.add_nodes/add_edges) with
 identical MERGE semantics; when a SparkSession HAS an Iceberg catalog
 configured (spark.sql.catalog.<name> = org.apache.iceberg.spark.
 SparkCatalog), these helpers route the same batches through real

@@ -162,8 +162,7 @@ def test_batch_add_nodes_and_edges(kg):
     row = kg.edges().filter("src_key = 'A1'").first()
     assert row.props["role"] == "r1"
 
-    # bulk fast path: count_valid=False skips the per-batch count job,
-    # returns -1, and writes the identical table
+    # count_valid=False returns -1 and writes the identical table
     n3 = kg.add_edges(
         [("ACTED_IN", "Actor", "Movie", {"name": "A2"}, {"title": "M2"},
           {"role": "fast"})],
