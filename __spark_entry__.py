@@ -48,7 +48,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("lang"),
     )
     all_pages = pages.unionByName(docs)
-    out = build_graph(spark, all_pages, movies_ontology(), reuse_text_col=True)
+    out = build_graph(spark, all_pages, movies_ontology())
     return out["triples"].orderBy("subj_label", "subj_key", "pred", "obj_key")
 
 

@@ -5694,7 +5694,7 @@ def cypher_write_replay(spark, sf_dir):
         "MERGE (s)-[r:IN_REGION]->(t) RETURN r"
         for p in pairs
     ]
-    stats = kg.execute_writes(queries, count_valid=True)
+    stats = kg.execute_writes(queries)
     assert stats["edges_written"] == len(pairs), stats
     return kg.query(
         "MATCH (n:Nation)-[:IN_REGION]->(r:Region) "

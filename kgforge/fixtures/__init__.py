@@ -231,7 +231,7 @@ def extract_corpus_triples(spark, corpus: str):
     mentions(label, key, attributes), raw_edges(label, src_label, src_key,
     dst_label, dst_key, attributes).
     """
-    from kgforge.operators import extract, normalize
+    from kgforge.plans.pipeline import flatten_stage, ir_stage
 
     if corpus == "madoff":
         pages, onto = _madoff_pages(spark), madoff_ontology()
@@ -247,21 +247,7 @@ def extract_corpus_triples(spark, corpus: str):
         wrappers = list(ATTRACTIONS_WRAPPERS)
     else:  # pragma: no cover
         raise ValueError(corpus)
-    rules = extract.compile_rules(onto)
-    ir = extract.extract_ir(
-        pages,
-        rules,
-        keep_cols=["url", "warc_ts"],
-        wrappers=wrappers,
-        html_col="html",
-    )
-    mentions, raw_edges = extract.explode_ir(ir)
-    mentions = normalize.sanitize_mentions(mentions)
-    raw_edges = normalize.sanitize_edges(raw_edges)
-    mentions, raw_edges = normalize.filter_to_ontology(
-        mentions, raw_edges, onto, spark
-    )
-    return mentions, raw_edges
+    return flatten_stage(ir_stage(pages, onto, wrappers), onto)
 
 
 def _gold_frames(spark, corpus: str):

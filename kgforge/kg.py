@@ -137,28 +137,20 @@ class KnowledgeGraph:
         q.awaitTermination()
 
     def rematerialize(self) -> dict:
-        """Rebuild the graph tables from the accumulated incremental IR."""
-        from kgforge.operators import link, materialize, normalize
+        """Rebuild the graph tables from the accumulated incremental IR:
+        the build's stages 03-08 (`pipeline.compose_graph`), held in
+        memory, then the nodes and edges written."""
+        from kgforge.plans.pipeline import InMemory, compose_graph
 
         ir = f"{self.out_dir}/incremental_ir"
         # batch_id is the stream's idempotence partition key, not IR data
         mentions = self.spark.read.parquet(f"{ir}/mentions").drop("batch_id")
         raw_edges = self.spark.read.parquet(f"{ir}/raw_edges").drop("batch_id")
-        mentions, _ = normalize.validate_attributes(mentions, self.ontology)
-        mentions = mentions.persist()
-        raw_edges = raw_edges.persist()
-        links = link.link_map(link.endpoint_names(mentions, raw_edges)).persist()
-        mentions_c, edges_c = materialize.apply_link_map(
-            mentions, raw_edges, links
-        )
-        nodes = materialize.build_nodes(
-            mentions_c, self.ontology.key_attrs()
-        ).localCheckpoint()
-        edges = materialize.build_edges(edges_c, nodes).localCheckpoint()
-        nodes.write.mode("overwrite").parquet(self.nodes_path)
-        edges.write.mode("overwrite").parquet(self.edges_path)
-        for df in (mentions, raw_edges, links):
-            df.unpersist()
+        commit = InMemory()
+        out = compose_graph(commit, mentions, raw_edges, self.ontology)
+        out["nodes"].write.mode("overwrite").parquet(self.nodes_path)
+        out["edges"].write.mode("overwrite").parquet(self.edges_path)
+        commit.unpersist()
         return {"nodes": self.nodes(), "edges": self.edges()}
 
     # ------------------------------------------------------- validation
@@ -336,7 +328,7 @@ class KnowledgeGraph:
         """Single-row wrapper (reference API parity)."""
         self.add_nodes([(label, attributes)])
 
-    def add_edges(self, rows: list[tuple], count_valid: bool = True) -> int:
+    def add_edges(self, rows: list[tuple]) -> int:
         """Batch MATCH (s) MATCH (d) MERGE (s)-[r]->(d) SET r += {...} for
         [(relation, src_label, dst_label, src_attrs, dst_attrs, attributes),
         ...]. Returns how many edges were written; rows whose endpoint
@@ -344,11 +336,8 @@ class KnowledgeGraph:
         MATCH semantics (extract_data_step.py:227-269). Existence is ONE
         filtered scan for the batch's distinct endpoints (`_live_edges`),
         not per-row scans; the upsert is one `_merge_rewrite` on
-        (src_id, label, dst_id).
-
-        `count_valid=False` returns -1 (unknown) instead of the count. The
-        count is the size of the resolved batch, known without a Spark job,
-        so both settings run the same jobs.
+        (src_id, label, dst_id). The count is the size of the batch
+        resolved on the driver, so it costs no Spark job.
         """
         if not rows:
             return 0
@@ -357,20 +346,19 @@ class KnowledgeGraph:
         if nodes is None:
             return 0
         live = self._live_edges(keyed, nodes)
-        n_valid = len(live) if count_valid else -1
         if not live:
-            return n_valid
+            return 0
         batch = self._edge_frame(live)
         if self.iceberg_tables is not None:
             from kgforge.sinks.iceberg import merge_edges
 
             merge_edges(self.spark, batch, self.iceberg_tables[1])
-            return n_valid
+            return len(live)
         self._merge_rewrite(
             self.edges_path, self.edges(), batch, ["src_id", "label", "dst_id"],
             ["label", "src_label", "src_key", "dst_label", "dst_key"], live,
         )
-        return n_valid
+        return len(live)
 
     def _edge_keyed(self, rows: list[tuple]) -> dict[tuple, dict]:
         """Validate every edge row (raising on the first bad one) and
@@ -509,9 +497,7 @@ class KnowledgeGraph:
 
         return match_edges(self.nodes(), self.edges(), src_label, relation, dst_label)
 
-    def execute_writes(
-        self, queries: list[str], count_valid: bool = False
-    ) -> dict:
+    def execute_writes(self, queries: list[str]) -> dict:
         """Replay reference-emitted write Cypher (`MERGE (n:L {..}) SET
         n += {..}` / `MATCH .. MATCH .. MERGE (s)-[r:R]->(t) ..`,
         ref extract_data_step.py:218-266) through the batch upserts —
@@ -520,7 +506,7 @@ class KnowledgeGraph:
         endpoint-keying deviation note."""
         from kgforge.plans.cypher_write import execute_writes
 
-        return execute_writes(self, queries, count_valid=count_valid)
+        return execute_writes(self, queries)
 
     def query(self, cypher: str) -> DataFrame:
         """Execute a read-only Cypher query (the subset the reference's

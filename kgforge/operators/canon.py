@@ -14,8 +14,8 @@ iterative-algorithm hygiene (SURVEY §4).
 
 The edges are symmetrized in one pass (each edge row explodes into both
 directions), so the edge plan — for linking, the whole candidate-pair plan
-with its scoring UDF — is evaluated once, when the persisted symmetric edge
-set first materializes. Each iteration's checkpoint counts, through an
+with its scoring UDF — is evaluated once, by the count that materializes the
+persisted symmetric edge set before the first iteration. Each iteration's checkpoint counts, through an
 ``Observation`` on the checkpointed plan, the vertices whose component moved
 this round; convergence is read from that count, which the checkpoint's own
 job computes, without joining the new checkpoint to the previous one or
@@ -57,6 +57,14 @@ def connected_components(
     comp = vertices.select(
         F.col("id"), F.col("id").alias("component")
     ).localCheckpoint()
+    # materialize the edge set in an action of its own: materialized inside
+    # the first iteration's query, an empty edge set raced the vertex
+    # exchange under adaptive execution, so that query's Spark job count
+    # varied between identical runs. With no edges every vertex is its own
+    # component and no iteration runs.
+    if sym.count() == 0:
+        sym.unpersist()
+        return comp
 
     for _ in range(max_iter):
         # min component among neighbors

@@ -221,9 +221,11 @@ def link_map(mentions: DataFrame, key_col: str = "key") -> DataFrame:
     """
     from kgforge.operators.canon import connected_components
 
+    # the name set feeds the candidate plan, CC's vertices and the output
+    # join; checkpointed so it is aggregated once, not once per consumer
     names = mentions.groupBy("label", F.col(key_col).alias("name")).agg(
         F.count("*").alias("freq")
-    )
+    ).localCheckpoint()
     pairs = candidate_pairs(names)
 
     # scored disambiguation: each name keeps its single best partner, and

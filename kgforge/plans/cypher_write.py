@@ -201,9 +201,7 @@ def _tail(c: _Cursor, var: str) -> dict:
     return set_props
 
 
-def execute_writes(
-    kg: "KnowledgeGraph", queries: list[str], count_valid: bool = False
-) -> dict:
+def execute_writes(kg: "KnowledgeGraph", queries: list[str]) -> dict:
     """Replay a batch of reference-emitted write queries.
 
     Parses EVERY query before touching storage (a syntax or ontology
@@ -214,7 +212,7 @@ def execute_writes(
     (see module docstring). Returns counters:
     {"nodes": parsed node queries, "edges": parsed edge queries,
      "segments": flush segments, "edges_written": sum of add_edges
-     counts, or -1 when count_valid=False}.
+     counts}.
     """
     parsed = [parse_write(q) for q in queries]
     # ontology validation before any IO, same all-or-nothing contract
@@ -227,8 +225,7 @@ def execute_writes(
             kg._validate(p[3], p[5])
     node_buf: list[tuple] = []
     edge_buf: list[tuple] = []
-    stats = {"nodes": 0, "edges": 0, "segments": 0,
-             "edges_written": -1 if not count_valid else 0}
+    stats = {"nodes": 0, "edges": 0, "segments": 0, "edges_written": 0}
 
     def flush():
         if not node_buf and not edge_buf:
@@ -238,9 +235,7 @@ def execute_writes(
             kg.add_nodes(node_buf)
             node_buf.clear()
         if edge_buf:
-            n = kg.add_edges(edge_buf, count_valid=count_valid)
-            if count_valid:
-                stats["edges_written"] += n
+            stats["edges_written"] += kg.add_edges(edge_buf)
             edge_buf.clear()
 
     for p in parsed:

@@ -340,6 +340,11 @@ class RunContext:
         )
         return final.drop("bucket")
 
+    def side_output(self, name: str, df: DataFrame) -> None:
+        """Write a stage's secondary output (no lineage of its own: it is
+        rewritten exactly when the stage that produces it runs)."""
+        df.write.mode("overwrite").parquet(self.stage_path(name))
+
     def stage_buckets(self, name: str) -> dict[int, str]:
         """bucket -> run_id that completed it (resume-evidence helper)."""
         return {

@@ -5,8 +5,8 @@ The reference's only incrementality is "call `process_sources` again"
 set that dies on restart (kg.py:58). The engine's streaming face:
 
 - `stream_extract`: `readStream` (file source over the pages directory) ->
-  `foreachBatch` running the SAME batch stage functions (text UDF +
-  extraction IR + explode/normalize) and appending mentions/raw_edges
+  `foreachBatch` calling the batch build's stage functions (text UDF ->
+  extraction IR -> flatten, plans/pipeline.py) and appending mentions/raw_edges
   parquet. The file-source + checkpoint pair replaces the in-memory set:
   restart resumes from the checkpoint, each file processed exactly once.
 - graph materialization (linking/CC/dedup) stays a periodic batch job over
@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge.ontology import Ontology
-from kgforge.operators import extract, normalize
-from kgforge.sources.html import text_expr
+from kgforge.plans.pipeline import flatten_stage, ir_stage, text_stage
 
 
 def stream_extract(
@@ -51,10 +50,11 @@ def stream_extract(
     counts (which link_map's canonical-name choice weighs) stay exact.
 
     Returns the StreamingQuery (caller awaits termination). Each micro-batch
-    runs the identical batch-stage composition, so batch/stream parity is
-    structural, not re-implemented.
+    calls the batch build's stage functions text -> IR -> flatten
+    (plans/pipeline.py), so it writes the batch build's flattened
+    mentions/raw_edges; attribute validation, linking and materialization
+    (stages 03-08) run later in `KnowledgeGraph.rematerialize`.
     """
-    rules = extract.compile_rules(onto)
     schema = (
         "url string, warc_ts timestamp, html binary, text string, lang string"
     )
@@ -65,23 +65,8 @@ def stream_extract(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        html_keep = ["html"] if wrappers else []
-        text_df = batch_df.select(
-            "url", "warc_ts", text_expr(batch_df), "lang", *html_keep
-        )
-        ir = extract.extract_ir(
-            text_df,
-            rules,
-            keep_cols=["url", "warc_ts"],
-            wrappers=wrappers,
-            html_col="html" if wrappers else None,
-        )
-        mentions, raw_edges = extract.explode_ir(ir)
-        mentions = normalize.sanitize_mentions(mentions)
-        raw_edges = normalize.sanitize_edges(raw_edges)
-        mentions, raw_edges = normalize.filter_to_ontology(
-            mentions, raw_edges, onto, batch_df.sparkSession
-        )
+        text = text_stage(batch_df, wrappers=wrappers)
+        mentions, raw_edges = flatten_stage(ir_stage(text, onto, wrappers), onto)
         for df, sub in ((mentions, "mentions"), (raw_edges, "raw_edges")):
             (
                 df.withColumn("batch_id", F.lit(batch_id))

@@ -123,7 +123,6 @@ def test_execute_writes_batches_and_reads_back(spark, workdir):
             'MATCH (s:Person {name: "Ana"}) MATCH (t:City {name: "Rio"}) '
             'MERGE (s)-[r:LIVES_IN]->(t) SET r += {since: "2020"}',
         ],
-        count_valid=True,
     )
     assert stats == {
         "nodes": 3, "edges": 1, "segments": 1, "edges_written": 1,
@@ -156,7 +155,6 @@ def test_execute_writes_sequential_visibility(spark, workdir):
             'MATCH (s:Person {name: "Bo"}) MATCH (t:City {name: "Lima"}) '
             "MERGE (s)-[r:LIVES_IN]->(t)",
         ],
-        count_valid=True,
     )
     assert stats["segments"] == 2
     assert stats["edges_written"] == 1  # only the post-creation edge

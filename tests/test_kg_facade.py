@@ -162,13 +162,12 @@ def test_batch_add_nodes_and_edges(kg):
     row = kg.edges().filter("src_key = 'A1'").first()
     assert row.props["role"] == "r1"
 
-    # count_valid=False returns -1 and writes the identical table
+    # an update counts as written and overwrites the prop in place
     n3 = kg.add_edges(
         [("ACTED_IN", "Actor", "Movie", {"name": "A2"}, {"title": "M2"},
           {"role": "fast"})],
-        count_valid=False,
     )
-    assert n3 == -1
+    assert n3 == 1
     assert kg.edges().filter("src_key = 'A2'").first().props["role"] == "fast"
     assert kg.edges().count() == 50  # upsert, no duplicate rows
 

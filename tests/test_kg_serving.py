@@ -102,8 +102,7 @@ def _oracle_add_edges(nodes: set, edges: dict, rows: list) -> int:
     return len(written)
 
 
-@pytest.mark.parametrize("count_valid", [True, False])
-def test_add_edges_matches_python_oracle(spark, workdir, count_valid):
+def test_add_edges_matches_python_oracle(spark, workdir):
     kg = KnowledgeGraph(spark, _onto(), workdir)
     _seed_graph(kg)
     nodes = {(r["label"], r["key"]) for r in kg.nodes().collect()}
@@ -114,8 +113,7 @@ def test_add_edges_matches_python_oracle(spark, workdir, count_valid):
     ])
     want_n = _oracle_add_edges(nodes, edges, MIXED)
     assert want_n == 3
-    got_n = kg.add_edges(MIXED, count_valid=count_valid)
-    assert got_n == (want_n if count_valid else -1)
+    assert kg.add_edges(MIXED) == want_n
     want = {
         (k[0], k[1], k[2], k[3], k[4], tuple(sorted(p.items())))
         for k, p in edges.items()
