@@ -24,6 +24,7 @@ import functools
 import operator
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +32,7 @@ from pyspark.sql.types import StructType
 
 from kgforge.ontology import Ontology
 from kgforge.operators.materialize import EDGES_SCHEMA, NODES_SCHEMA
+from kgforge.session import local_frame
 
 
 class KnowledgeGraph:
@@ -197,79 +199,58 @@ class KnowledgeGraph:
     # ------------------------------------------------------------ upserts
     #
     # Parquet has no MERGE INTO, so an upsert rewrites the table; the batch
-    # APIs amortize that: N rows = ONE shuffle of the batch with the table
-    # rows it touches + ONE write (`_merge_rewrite`; the per-row wrappers
-    # below keep reference API parity but cost a full rewrite per call —
-    # never loop them; pass the batch).
-
-    @staticmethod
-    def _overlay(old_col: str, new_col: str):
-        """SET += semantics: new values overwrite, untouched keys survive
-        (map_concat would throw on duplicate keys under the default
-        mapKeyDedupPolicy, so overlapping old keys are filtered first)."""
-        return F.map_concat(
-            F.map_filter(
-                old_col,
-                lambda k, _: ~F.array_contains(
-                    F.map_keys(F.col(new_col)), k
-                ),
-            ),
-            new_col,
-        )
+    # APIs amortize that: N rows = ONE filtered scan that collects the table
+    # rows the batch can touch, the MERGE of those rows on the driver, and
+    # ONE write (`_merge_rewrite`; the per-row wrappers below keep reference
+    # API parity but cost a full rewrite per call — never loop them; pass
+    # the batch). Driver-held rows enter Spark as local relations
+    # (`session.local_frame`), so no Python worker and no shuffle touch a
+    # batch.
 
     def _merge_rewrite(
         self,
         path: str,
         existing: DataFrame | None,
-        batch: DataFrame,
-        keycols: list[str],
+        keyed: dict[tuple, dict],
         idcols: list[str],
-        idents: dict[tuple, dict],
+        frame: Callable[[dict[tuple, dict]], DataFrame],
     ) -> None:
         """Overwrite the table at `path` with `existing` MERGEd with the
-        key-unique `batch`, shuffling only the table rows the batch can
-        touch.
+        key-unique batch `keyed` ({identity tuple in `idcols` order:
+        props}); `frame` turns such a dict into table rows, deriving the
+        key columns from the identity (`node_id` is xxhash64(label, key),
+        an edge's ids hash its endpoints).
 
-        The key columns hash the identity columns `idcols` (`node_id` is
-        xxhash64(label, key), an edge's ids hash its endpoints), and
-        `idents` is keyed by the batch's identity tuples in `idcols` order. A
-        table row can share a key with the batch only if each of its
-        identity values occurs in the batch, so one `isin` per column
-        splits the table: `touched` rows (a small superset of the matches)
-        are unioned with the batch (`_new = 1`, table rows `_new = 0`) and
-        grouped by `keycols`; the batch row's columns win
-        (`max_by(.., _new)`) and, when both are present, `props` is the
-        `SET +=` overlay of the two. Every other row passes straight
-        through to the write. The localCheckpoint materializes the result
-        before the overwrite deletes the files it was read from.
+        A table row can share an identity with the batch only if each of
+        its identity values occurs in the batch, so one `isin` per column
+        splits the table. The `touched` rows (a small superset of the
+        matches) are collected, and the MERGE runs on them in Python: a row
+        the batch names gets the `SET +=` overlay (new values win, untouched
+        keys survive), a row it does not name goes back unchanged, and a
+        batch identity no row has is inserted. The write is the untouched
+        rows plus one local relation of the merged rows; the localCheckpoint
+        materializes it before the overwrite deletes the files it was read
+        from.
         """
-        if existing is None:
-            batch.write.mode("overwrite").parquet(path)
-            return
-        touched = F.coalesce(
-            functools.reduce(operator.and_, (
-                F.col(c).isin(sorted({ident[i] for ident in idents}))
-                for i, c in enumerate(idcols)
-            )),
-            F.lit(False),
-        )
-        new = F.col("_new")
-        both = existing.where(touched).withColumn("_new", F.lit(0)).unionByName(
-            batch.withColumn("_new", F.lit(1))
-        )
-        merged = both.groupBy(*keycols).agg(
-            *(F.max_by(c, new).alias(c)
-              for c in existing.columns if c not in keycols),
-            F.min_by("props", new).alias("_old"),
-            F.count(new).alias("_n"),
-        ).withColumn(
-            "props",
-            F.when(F.col("_n") > 1, self._overlay("_old", "props"))
-            .otherwise(F.col("props")),
-        )
-        out = existing.where(~touched).unionByName(
-            merged.select(*existing.columns)
-        ).localCheckpoint()
+        merged: dict[tuple, dict] = {}
+        if existing is not None:
+            touched = F.coalesce(
+                functools.reduce(operator.and_, (
+                    F.col(c).isin(sorted({ident[i] for ident in keyed}))
+                    for i, c in enumerate(idcols)
+                )),
+                F.lit(False),
+            )
+            for r in existing.where(touched).select(*idcols, "props").collect():
+                merged[tuple(r[:-1])] = r["props"]
+        for ident, props in keyed.items():
+            old = merged.get(ident) or {}
+            merged[ident] = {
+                k: v for k, v in old.items() if k not in props
+            } | props
+        out = frame(merged)
+        if existing is not None:
+            out = existing.where(~touched).unionByName(out).localCheckpoint()
         out.write.mode("overwrite").parquet(path)
 
     def _node_keyed(self, rows: list[tuple[str, dict]]) -> dict[tuple, dict]:
@@ -286,8 +267,10 @@ class KnowledgeGraph:
         return by_key
 
     def _node_frame(self, keyed: dict[tuple, dict]) -> DataFrame:
-        """Node-table rows (NODES_SCHEMA columns) for keyed nodes."""
-        return self.spark.createDataFrame(
+        """Node-table rows (NODES_SCHEMA columns) for keyed nodes, as a
+        local relation."""
+        return local_frame(
+            self.spark,
             [(label, key, props) for (label, key), props in keyed.items()],
             "label string, key string, props map<string,string>",
         ).select(
@@ -295,9 +278,10 @@ class KnowledgeGraph:
         )
 
     def _node_batch(self, rows: list[tuple[str, dict]]) -> DataFrame:
-        """Validated, key-collapsed node batch DF. Shared by the parquet
-        rewrite and the Iceberg MERGE source — and by the equivalence
-        property test that pins the two paths to each other."""
+        """Validated, key-collapsed node batch DF: the Iceberg MERGE
+        source (the parquet rewrite MERGEs the same keyed rows on the
+        driver); the equivalence property test uses it to pin the two
+        paths to each other."""
         return self._node_frame(self._node_keyed(rows))
 
     def add_nodes(self, rows: list[tuple[str, dict]]) -> None:
@@ -306,22 +290,24 @@ class KnowledgeGraph:
 
         Validation is driver-side per row (raises on the first bad row,
         before any write); the upsert itself is one `_merge_rewrite`: one
-        shuffle of the batch with the table rows sharing its labels and
-        keys, then one write. Duplicate keys within the batch collapse
-        last-wins in input order, matching sequential MERGE calls.
+        filtered scan collects the table rows sharing the batch's labels
+        and keys, the MERGE runs on the driver, then one write. Duplicate
+        keys within the batch collapse last-wins in input order, matching
+        sequential MERGE calls.
         """
         if not rows:
             return
         keyed = self._node_keyed(rows)
-        batch = self._node_frame(keyed)
         if self.iceberg_tables is not None:
             from kgforge.sinks.iceberg import merge_nodes
 
-            merge_nodes(self.spark, batch, self.iceberg_tables[0])
+            merge_nodes(
+                self.spark, self._node_frame(keyed), self.iceberg_tables[0]
+            )
             return
         self._merge_rewrite(
-            self.nodes_path, self.nodes(), batch, ["node_id"],
-            ["label", "key"], keyed,
+            self.nodes_path, self.nodes(), keyed, ["label", "key"],
+            self._node_frame,
         )
 
     def add_node(self, label: str, attributes: dict) -> None:
@@ -335,9 +321,10 @@ class KnowledgeGraph:
         nodes don't exist are silently dropped — the reference's Cypher
         MATCH semantics (extract_data_step.py:227-269). Existence is ONE
         filtered scan for the batch's distinct endpoints (`_live_edges`),
-        not per-row scans; the upsert is one `_merge_rewrite` on
-        (src_id, label, dst_id). The count is the size of the batch
-        resolved on the driver, so it costs no Spark job.
+        not per-row scans; the upsert is one `_merge_rewrite` on the edge
+        identity (label and both endpoints' label and key). The count is
+        the size of the batch resolved on the driver, so it costs no Spark
+        job.
         """
         if not rows:
             return 0
@@ -348,15 +335,17 @@ class KnowledgeGraph:
         live = self._live_edges(keyed, nodes)
         if not live:
             return 0
-        batch = self._edge_frame(live)
         if self.iceberg_tables is not None:
             from kgforge.sinks.iceberg import merge_edges
 
-            merge_edges(self.spark, batch, self.iceberg_tables[1])
+            merge_edges(
+                self.spark, self._edge_frame(live), self.iceberg_tables[1]
+            )
             return len(live)
         self._merge_rewrite(
-            self.edges_path, self.edges(), batch, ["src_id", "label", "dst_id"],
-            ["label", "src_label", "src_key", "dst_label", "dst_key"], live,
+            self.edges_path, self.edges(), live,
+            ["label", "src_label", "src_key", "dst_label", "dst_key"],
+            self._edge_frame,
         )
         return len(live)
 
@@ -410,8 +399,9 @@ class KnowledgeGraph:
 
     def _edge_frame(self, keyed: dict[tuple, dict]) -> DataFrame:
         """Edge-table rows (EDGES_SCHEMA columns) for already-resolved
-        keyed edges."""
-        return self.spark.createDataFrame(
+        keyed edges, as a local relation."""
+        return local_frame(
+            self.spark,
             [k + (props,) for k, props in keyed.items()],
             "label string, src_label string, src_key string, "
             "dst_label string, dst_key string, props map<string,string>",
@@ -427,9 +417,9 @@ class KnowledgeGraph:
     ) -> DataFrame:
         """Key-collapsed edge batch with both endpoints resolved against
         `nodes` (rows with a missing endpoint drop out — Cypher MATCH
-        semantics). The same resolved batch feeds the parquet rewrite and
-        the Iceberg MERGE source; the equivalence property test uses this
-        to pin the two paths to each other."""
+        semantics): the Iceberg MERGE source (the parquet rewrite MERGEs
+        the same resolved rows on the driver); the equivalence property
+        test uses it to pin the two paths to each other."""
         return self._edge_frame(self._live_edges(keyed, nodes))
 
     def add_edge(
@@ -1087,7 +1077,7 @@ class KnowledgeGraph:
             F.col("node_id").alias("id"), "label", "key"
         )
         seed_df = n.join(
-            self.spark.createDataFrame(seeds, "label string, key string"),
+            local_frame(self.spark, seeds, "label string, key string"),
             on=["label", "key"],
             how="left_semi",
         ).select("id")

@@ -305,8 +305,11 @@ class Ontology:
         return {"entities": ents, "relations": rels}
 
     def to_dataframes(self, spark):
-        """Two small DataFrames for join-based validation (broadcast side)."""
+        """Two small DataFrames for join-based validation (broadcast side),
+        as local relations."""
         from pyspark.sql import types as T
+
+        from kgforge.session import local_frame
 
         attr_t = T.ArrayType(
             T.StructType(
@@ -349,8 +352,8 @@ class Ontology:
             for r in self.relations
         ]
         return (
-            spark.createDataFrame(ent_rows, ent_schema),
-            spark.createDataFrame(rel_rows, rel_schema),
+            local_frame(spark, ent_rows, ent_schema),
+            local_frame(spark, rel_rows, rel_schema),
         )
 
 

@@ -173,6 +173,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.session import local_frame
+
 _CLAUSE = re.compile(
     r"\bOPTIONAL\s+MATCH\b|\bMATCH\b|\bWHERE\b|\bWITH\b|\bRETURN\b"
     r"|\bORDER\s+BY\b|\bLIMIT\b|\bSKIP\b|\bCALL\b|\bUNWIND\b",
@@ -1262,8 +1264,8 @@ def run_cypher(
                 plan = plan.withColumn(uvar, F.lit(None).cast("string"))
                 continue
             kind = "string" if strs else "double"
-            vdf = nodes.sparkSession.createDataFrame(
-                [(v,) for v in vals], f"{uvar} {kind}"
+            vdf = local_frame(
+                nodes.sparkSession, [(v,) for v in vals], f"{uvar} {kind}"
             )
             plan = plan.crossJoin(F.broadcast(vdf))
             unwind_cols[uvar] = kind

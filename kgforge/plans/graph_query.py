@@ -2170,7 +2170,9 @@ def coreness(
     max-least). Fixed `n_rounds` is the cross-engine unroll contract
     (the k_core/LPA discipline); n_rounds=None iterates to the
     fixpoint with an anti-join convergence probe, `localCheckpoint`
-    per round. Isolated nodes sit at 0. edges symmetrized by caller.
+    per round, and raises RuntimeError when `max_rounds` rounds pass
+    without reaching it. Isolated nodes sit at 0. edges symmetrized by
+    caller.
     """
     from pyspark.sql import Window
 
@@ -2220,4 +2222,11 @@ def coreness(
                 cur = nxt
                 break
         cur = nxt
+    else:
+        if n_rounds is None:
+            raise RuntimeError(
+                f"coreness not converged after max_rounds={max_rounds} "
+                "rounds (values tighten about one hop per round on long "
+                "paths); raise max_rounds"
+            )
     return cur

@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from kgforge.session import local_frame
+
 STAGE_COMPLETE = "stage_complete"
 BUCKET_COMPLETE = "bucket_complete"
 # Per-partition counter rows carry WHICH counting mode produced them
@@ -175,7 +177,7 @@ class RunContext:
     def lineage(self) -> DataFrame:
         """The lineage log as a Spark DataFrame (empty before any commit)."""
         rows = [tuple(r.values()) for r in self._read_lineage()]
-        return self.spark.createDataFrame(rows, from_arrow_schema(LINEAGE_SCHEMA))
+        return local_frame(self.spark, rows, from_arrow_schema(LINEAGE_SCHEMA))
 
     def stage_complete(self, name: str) -> bool:
         marker = self._fs.get_file_info(self._fs_path(name, "_SUCCESS"))

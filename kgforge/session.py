@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and `local_frame`,
+the one way driver-held rows become a DataFrame.
 
 The same configuration is used by tests (local[32]) and the two-parallelism
 bench (local[8] vs local[32]); on a real cluster the master/shuffle-partition
@@ -9,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -46,3 +50,24 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-held `rows` (tuples in `schema` field order; `schema` is a
+    StructType or a DDL string) as a DataFrame over a local relation.
+
+    `createDataFrame(<python list>)` plans the rows as a PythonRDD: every
+    action starts a Python worker that unpickles them again inside a Spark
+    task. A `pyarrow.Table` becomes a `LocalRelation` instead, planned as
+    a `LocalTableScan` that the driver evaluates, so no Python worker ever
+    touches the rows and projections over them fold into the relation.
+    The Arrow-table path has no fallback to the list path."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)

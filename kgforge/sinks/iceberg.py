@@ -15,7 +15,9 @@ The generated SQL mirrors the facade's semantics exactly:
 - node identity  = node_id (xxhash64 of label + canonical key);
 - edge identity  = (src_id, label, dst_id);
 - matched rows   : `SET props +=` overlay — new keys win, untouched keys
-  survive (same map_filter/map_concat expression kg._overlay uses);
+  survive (the map_filter/map_concat expression below; the parquet path's
+  `kg._merge_rewrite` applies the same overlay to the collected rows on
+  the driver, and tests/test_merge_equivalence.py pins the two together);
 - unmatched rows : plain INSERT.
 
 SQL generation is unit-tested everywhere; execution tests are gated on a

@@ -1553,3 +1553,15 @@ def test_coreness_clique_and_fixed_rounds_monotone(spark):
     assert s0[0] == 5 and s1[0] == 1  # hub's h-index collapses
     assert all(s1[i] <= s0[i] for i in s0)
     assert {r.c for r in coreness(star, sn).collect()} == {1}
+
+
+def test_coreness_fixpoint_raises_when_max_rounds_run_out(spark):
+    """On a path, values tighten one hop per round from the ends: after
+    one round the middle of a 6-node path still reads 2 instead of 1, so a
+    fixpoint capped at one round must raise, not return that."""
+    from kgforge.plans.graph_query import coreness
+
+    path = symmetrize(_edges(spark, [(i, i + 1) for i in range(5)]))
+    n = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        coreness(path, n, max_rounds=1)

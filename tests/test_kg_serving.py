@@ -1,6 +1,7 @@
 """Serving-path contracts of the KnowledgeGraph facade: table reads with the
-pinned schemas, the upserts' per-call Spark job budget, `add_edges` against a
-pure-Python MERGE oracle, and what happens when a table path is unreadable.
+pinned schemas, the upserts' per-call Spark job budget, `add_nodes` and
+`add_edges` against pure-Python MERGE oracles, and what happens when a table
+path is unreadable.
 """
 
 from __future__ import annotations
@@ -38,11 +39,14 @@ def _onto() -> Ontology:
     )
 
 
+SEED_NODES = (
+    [("Person", {"name": n}) for n in ("P1", "P2", "P3")]
+    + [("Movie", {"title": t}) for t in ("M1", "M2", "M3", "Ana")]
+)
+
+
 def _seed_graph(kg: KnowledgeGraph) -> None:
-    kg.add_nodes(
-        [("Person", {"name": n}) for n in ("P1", "P2", "P3")]
-        + [("Movie", {"title": t}) for t in ("M1", "M2", "M3", "Ana")]
-    )
+    kg.add_nodes(SEED_NODES)
     kg.add_edges([
         _acted("P1", "M1", role="lead", credit="1"),
         _acted("P2", "M1", role="extra"),
@@ -123,6 +127,67 @@ def test_add_edges_matches_python_oracle(spark, workdir):
     assert kg.edges().where(
         (F.col("src_id") != F.xxhash64("src_label", "src_key"))
         | (F.col("dst_id") != F.xxhash64("dst_label", "dst_key"))
+    ).count() == 0
+    kg.delete()
+
+
+# Node rows applied after the seed: a movie gains a rating, and a movie
+# keyed like a seeded person ("P2") gets props in non-alphabetical order.
+PRE_NODES = [
+    ("Movie", {"title": "M1", "rating": "5"}),
+    ("Movie", {"rating": "7", "title": "P2"}),
+]
+# One mixed node batch: a key repeated inside the batch (last wins), an
+# update whose SET += keeps the untouched `rating`, a fresh insert, and
+# the person "P2", which puts the unnamed movie "P2" inside the batch's
+# label x key `isin` superset.
+MIXED_NODES = [
+    ("Movie", {"title": "M2", "rating": "1"}),
+    ("Movie", {"title": "M1"}),
+    ("Movie", {"title": "M2", "rating": "2"}),
+    ("Person", {"name": "P2"}),
+    ("Person", {"name": "Neo"}),
+]
+
+
+def _oracle_add_nodes(nodes: dict, rows: list) -> None:
+    """Sequential MERGE (n:label {unique}) SET n += {..} per row."""
+    for label, attrs in rows:
+        key = attrs["name" if label == "Person" else "title"]
+        nodes.setdefault((label, key), {}).update(attrs)
+
+
+def _node_rows(kg: KnowledgeGraph) -> dict:
+    """{(label, key): (node_id, props items in stored order)}."""
+    return {
+        (r["label"], r["key"]): (r["node_id"], list(r["props"].items()))
+        for r in kg.nodes().collect()
+    }
+
+
+def test_add_nodes_matches_python_oracle(spark, workdir):
+    kg = KnowledgeGraph(spark, _onto(), workdir)
+    _seed_graph(kg)
+    kg.add_nodes(PRE_NODES)
+    nodes: dict = {}
+    _oracle_add_nodes(nodes, SEED_NODES + PRE_NODES)
+    before = _node_rows(kg)
+    # every attribute type rejects None, before any write
+    with pytest.raises(ValueError, match="must be a string"):
+        kg.add_nodes([("Movie", {"title": "M3", "rating": None})])
+    assert _node_rows(kg) == before
+    _oracle_add_nodes(nodes, MIXED_NODES)
+    kg.add_nodes(MIXED_NODES)
+    after = _node_rows(kg)
+    assert {k: dict(props) for k, (_, props) in after.items()} == nodes
+    assert dict(after[("Movie", "M2")][1]) == {"title": "M2", "rating": "2"}
+    assert dict(after[("Movie", "M1")][1]) == {"title": "M1", "rating": "5"}
+    # caught by the superset, not named by the batch: written back as it was
+    assert after[("Movie", "P2")] == before[("Movie", "P2")]
+    assert after[("Movie", "P2")][1] == [("rating", "7"), ("title", "P2")]
+    # ids stay the hash of the node identity
+    assert kg.nodes().where(
+        F.col("node_id") != F.xxhash64("label", "key")
     ).count() == 0
     kg.delete()
 
