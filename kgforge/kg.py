@@ -261,9 +261,7 @@ class KnowledgeGraph:
             self._validate(label, attributes)
             key = self._node_key(label, attributes)
             props = by_key.setdefault((label, key), {})
-            props.update(
-                {k: ("" if v is None else str(v)) for k, v in attributes.items()}
-            )
+            props.update({k: str(v) for k, v in attributes.items()})
         return by_key
 
     def _node_frame(self, keyed: dict[tuple, dict]) -> DataFrame:
@@ -374,10 +372,7 @@ class KnowledgeGraph:
                 dst_label, self._node_key(dst_label, dst_attrs),
             )
             props = by_key.setdefault(k, {})
-            props.update(
-                {k_: ("" if v is None else str(v))
-                 for k_, v in attributes.items()}
-            )
+            props.update({k_: str(v) for k_, v in attributes.items()})
         return by_key
 
     def _live_edges(

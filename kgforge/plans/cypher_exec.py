@@ -163,7 +163,28 @@ Semantics and scope:
 
 Everything compiles to label-filtered equi-joins + hash aggregation —
 Catalyst reorders/broadcasts them like any relational plan; there is no
-interpreter in the loop at execution time.
+interpreter in the loop at execution time. Two plan shapes keep serving
+reads small:
+
+- edge-resolved node variables: when the edge frame carries the KG
+  endpoint columns (``src_label/src_key/dst_label/dst_key``, EDGES_SCHEMA),
+  a first-stage node variable whose properties the query never reads
+  takes its id, key and label check from the edge row of the leg that
+  binds it, with no join against the nodes table (a props-free first
+  variable starts the plan from its leg's edge scan). Every writer of the
+  KG edge table keeps referential integrity, which makes this exact. A
+  property read (``v.prop``, ``properties``/``keys``, inline ``{..}``
+  props), a WITH carry, an OPTIONAL MATCH or a variable-length leg keeps
+  the join, and so does a frame without those columns. The two-hop
+  ``(p)-[]->(m)-[]->(g) WHERE p.name = 'x' RETURN m, g`` joins only
+  ``p``; ``RETURN p, count(m)`` over one leg joins no node at all.
+- the anchored tail: when the root variable is pinned by an equality
+  (``WHERE p.name = 'x'`` or inline props) and the query is one stage, a
+  final DISTINCT/ORDER BY with no LIMIT runs over one partition, with no
+  hash exchange, range-sampling job or range exchange, so a read runs the
+  same number of Spark jobs whether or not it returns rows (an anchor
+  absent from the graph still ends after its empty broadcast). Unanchored
+  reads keep the parallel tail.
 """
 
 from __future__ import annotations
@@ -1151,7 +1172,12 @@ def run_cypher(
             ).dropDuplicates()
         return out
 
-    def leg_df(leg) -> DataFrame:
+    def leg_df(
+        leg, resolve: frozenset[str] | set[str] = frozenset()
+    ) -> DataFrame:
+        """The leg's edge relation as (src__id, dst__id[, rel columns]).
+        Each endpoint var in `resolve` also gets its `__key` and label
+        check from the edge row's endpoint columns (see `resolvable`)."""
         src, rel, dst, hops, rel_var, path_var, undirected = leg
         if src == dst:
             raise CypherUnsupported("self-loop legs are not supported")
@@ -1160,35 +1186,60 @@ def run_cypher(
         e = edges
         if rel is not None:
             e = e.filter(_label_pred(rel))
-        cols = [
-            F.col("src_id").alias(f"{src}__id"),
-            F.col("dst_id").alias(f"{dst}__id"),
-        ]
         if rel_var is not None:
-            cols.append(F.col("props").alias(f"{rel_var}__props"))
-            cols.append(F.col("label").alias(f"{rel_var}__type"))
             # endpoint vars per bound rel var, for startNode()/endNode()
             rel_endpoints[rel_var] = (src, dst, undirected)
-        fwd = e.select(*cols)
+
+        def oriented(src_end: str, dst_end: str) -> DataFrame:
+            out = e
+            cols = [
+                F.col(f"{src_end}_id").alias(f"{src}__id"),
+                F.col(f"{dst_end}_id").alias(f"{dst}__id"),
+            ]
+            for v, end in ((src, src_end), (dst, dst_end)):
+                if v in resolve:
+                    label = var_specs[v][0]
+                    if label is not None:
+                        out = out.filter(F.col(f"{end}_label") == label)
+                    cols.append(F.col(f"{end}_key").alias(f"{v}__key"))
+            if rel_var is not None:
+                cols.append(F.col("props").alias(f"{rel_var}__props"))
+                cols.append(F.col("label").alias(f"{rel_var}__type"))
+            return out.select(*cols)
+
+        fwd = oriented("src", "dst")
         if not undirected:
             return fwd
         # Cypher: an undirected leg matches the relationship once per
         # orientation that fits — the union of both orientations, one
         # scan each, no dedup (a stored (a->b) yields both (src=a,dst=b)
         # and (src=b,dst=a) bindings, as in openCypher)
-        rcols = [
-            F.col("dst_id").alias(f"{src}__id"),
-            F.col("src_id").alias(f"{dst}__id"),
-        ]
-        if rel_var is not None:
-            rcols.append(F.col("props").alias(f"{rel_var}__props"))
-            rcols.append(F.col("label").alias(f"{rel_var}__type"))
-        return fwd.unionByName(e.select(*rcols))
+        return fwd.unionByName(oriented("dst", "src"))
+
+    def bind_leg(leg, plan: DataFrame | None, bound: set[str],
+                 resolvable: set[str]) -> DataFrame:
+        """Join `leg` onto `plan` (None: the leg's edge scan starts the
+        plan) on its bound endpoints, then bind its other endpoints:
+        from the edge row when resolvable, else by joining node_df."""
+        new = [v for v in (leg[0], leg[2]) if v not in bound]
+        e = leg_df(leg, {v for v in new if v in resolvable})
+        if plan is None:
+            plan = e
+        else:
+            plan = plan.join(
+                e, on=[f"{v}__id" for v in (leg[0], leg[2]) if v in bound]
+            )
+        for v in new:
+            bound.add(v)
+            if v not in resolvable:
+                plan = plan.join(node_df(v), on=f"{v}__id")
+        return plan
 
     def assemble(plan: DataFrame, bound: set[str],
-                 groups: list[list[str]], legs: list[tuple]) -> DataFrame:
+                 groups: list[list[str]], legs: list[tuple],
+                 resolvable: set[str] = frozenset()) -> DataFrame:
         """Fold legs into the plan: equi-join each leg whose endpoint is
-        already bound (joining in node_df for newly-bound endpoints),
+        already bound (binding its newly-bound endpoints, see bind_leg),
         cross-join genuinely disjoint pattern groups (Cypher's cartesian
         semantics), then attach any legs whose endpoints only became
         bound via the cross joins."""
@@ -1200,16 +1251,7 @@ def run_cypher(
                 idx, leg = item
                 src, dst = leg[0], leg[2]
                 if src in bound or dst in bound:
-                    e = leg_df(leg)
-                    join_keys = [
-                        f"{v}__id" for v in (src, dst) if v in bound
-                    ]
-                    # rename the edge's columns for not-yet-bound endpoints
-                    plan = plan.join(e, on=join_keys)
-                    for v in (src, dst):
-                        if v not in bound:
-                            bound.add(v)
-                            plan = plan.join(node_df(v), on=f"{v}__id")
+                    plan = bind_leg(leg, plan, bound, resolvable)
                     pending.remove(item)
                     progress = True
         # disjoint groups (no shared vars / no connecting leg): cartesian
@@ -1226,11 +1268,73 @@ def run_cypher(
                 plan = plan.join(e, on=[f"{src}__id", f"{dst}__id"])
         return plan
 
-    # seed with the first pattern's first variable
+    # Node vars resolvable from the edge row. Every writer of the KG edge
+    # table keeps referential integrity (build_edges inner-joins both
+    # endpoints, add_edges keeps only the edges whose endpoints exist,
+    # rematerialize reruns the build), so an edge row's src_label/src_key
+    # and dst_label/dst_key are its endpoint nodes' label and key. A var
+    # whose properties the query never reads can take its __id, __key
+    # and label check from there instead of a join with the nodes table.
+    # Any doubt keeps the join: a var named with a property access, in
+    # properties()/keys(), with inline props, in a WITH or an OPTIONAL
+    # MATCH, or on a variable-length leg; and frames without the
+    # endpoint columns.
+    resolvable: set[str] = set()
+    if edges is not None and {
+        "src_label", "src_key", "dst_label", "dst_key"
+    } <= set(edges.columns):
+        masked_q = _mask_quotes(text)
+        scoped = " ".join(
+            [seg["with"] or "" for seg in segments]
+            + [o for seg in segments for o, _ in seg["optionals"]]
+        )
+        var_length = {
+            v for leg in all_legs if leg[3] is not None
+            for v in (leg[0], leg[2])
+        }
+        for v, (_label, props) in var_specs.items():
+            name = re.escape(v)
+            if not (
+                props
+                or v in var_length
+                or re.search(rf"(?<![\w.]){name}\s*\.\s*\w", masked_q)
+                or re.search(
+                    rf"\b(?:properties|keys)\s*\(\s*{name}\s*\)",
+                    masked_q, re.IGNORECASE,
+                )
+                or re.search(rf"\b{name}\b", scoped)
+            ):
+                resolvable.add(v)
+
+    def anchored(v: str) -> bool:
+        """`v` is pinned by an equality: inline props, or a top-level
+        `v.prop = literal` conjunct of a first-stage WHERE."""
+        if var_specs[v][1]:
+            return True
+        for wt in segments[0]["wheres"]:
+            if len(_split_keyword_toplevel(wt, r"\bOR\b")) > 1:
+                continue
+            for conj in _split_keyword_toplevel(wt, r"\bAND\b"):
+                cm = _COND.fullmatch(conj.strip())
+                if cm is not None and cm.group(1) == v and cm.group(3) == "=":
+                    return True
+        return False
+
+    # seed with the first pattern's first variable; a resolvable one with
+    # a single-hop leg starts from that leg's edge scan instead
     first_var = pattern_groups[0][0]
-    plan = node_df(first_var)
-    bound.add(first_var)
-    plan = assemble(plan, bound, pattern_groups, all_legs)
+    seed = next(
+        (i for i, leg in enumerate(all_legs)
+         if leg[3] is None and first_var in (leg[0], leg[2])),
+        None,
+    ) if first_var in resolvable else None
+    legs = list(all_legs)
+    if seed is None:
+        plan = node_df(first_var)
+        bound.add(first_var)
+    else:
+        plan = bind_leg(legs.pop(seed), None, bound, resolvable)
+    plan = assemble(plan, bound, pattern_groups, legs, resolvable)
 
     # ---- UNWIND literal lists: one row per element ---------------------
     # The values relation is tiny and local; the cross join is the
@@ -3094,6 +3198,18 @@ def run_cypher(
                 (name, (direction or "").upper() == "DESC", False)
             )
 
+    if (
+        len(segments) == 1
+        and (ret_is_distinct or order_items)
+        and limit_text is None
+        and anchored(first_var)
+    ):
+        # an anchored read ends in a few rows: DISTINCT and ORDER BY over
+        # one partition need no hash exchange, no range-sampling job and
+        # no range exchange (adaptive execution skips some of those
+        # stages after an empty side, so their job count varied with
+        # the parameter)
+        plan = plan.coalesce(1)
     out = compile_projection(plan, ret_text, ns, extra_cols)
 
     # ---- ORDER BY / SKIP / LIMIT --------------------------------------

@@ -30,6 +30,11 @@ def get_spark(
     - Arrow on (every Python-side operator is a pandas/Arrow UDF; zero
       per-row Python on the hot path).
     - shuffle partitions sized to cores locally; on a cluster leave to AQE.
+    - no DataFrame call-site capture: with it on, PySpark records the
+      Python call site of every `F.col`/`.alias`/comparison through 13-24
+      py4j round trips, which made up about half of planning a Cypher
+      read. Error messages lose only the Python line of the failing
+      expression.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
@@ -46,6 +51,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

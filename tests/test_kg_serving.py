@@ -7,6 +7,7 @@ path is unreadable.
 from __future__ import annotations
 
 import os
+import re
 import uuid
 from contextlib import contextmanager
 
@@ -305,3 +306,67 @@ def test_existence_follows_sparks_filesystem(spark, workdir):
     assert sorted(os.listdir(os.path.join(workdir, "kg"))) == sorted(
         os.path.basename(p) for p in (kg.nodes_path, kg.edges_path)
     )
+
+
+def test_read_job_budget(spark, workdir):
+    """Fixed per-read Spark jobs of the serving reads. With every node
+    variable joined back from the nodes table and the DISTINCT/ORDER BY
+    tail spread over the shuffle partitions, the two-hop ran 5 jobs for a
+    name without rows and 8 for a name with rows, and the top-k 4. Node
+    variables resolved from the edge row and an anchored read finished in
+    one partition run 3 for both, and 2."""
+    from kgforge.sources.pages import movies_ontology
+
+    kg = KnowledgeGraph(spark, movies_ontology(), workdir)
+    kg.add_nodes(
+        [("Person", {"name": n}) for n in ("P1", "P2", "P3")]
+        + [("Movie", {"title": t}) for t in ("M1", "M2")]
+        + [("Genre", {"name": g}) for g in ("Noir", "Drama")]
+    )
+    kg.add_edges([
+        ("ACTED_IN", "Person", "Movie", {"name": p}, {"title": m}, {})
+        for p, m in (("P1", "M1"), ("P1", "M2"), ("P2", "M2"))
+    ] + [
+        ("HAS_GENRE", "Movie", "Genre", {"title": m}, {"name": g}, {})
+        for m, g in (("M1", "Noir"), ("M2", "Drama"))
+    ])
+
+    def two_hop(name):
+        return (
+            "MATCH (p:Person)-[:ACTED_IN]->(m:Movie)-[:HAS_GENRE]->(g:Genre) "
+            f"WHERE p.name = '{name}' RETURN DISTINCT m, g ORDER BY m, g"
+        )
+
+    point = "MATCH (m:Movie) WHERE m.title = 'M1' RETURN m"
+    top_k = (
+        "MATCH (p:Person)-[:ACTED_IN]->(m:Movie) "
+        "RETURN p, count(m) AS n ORDER BY n DESC, p LIMIT 5"
+    )
+    assert _jobs(spark, lambda: kg.query(point).collect()) == 1
+    with_rows = _jobs(spark, lambda: kg.query(two_hop("P1")).collect())
+    without_rows = _jobs(spark, lambda: kg.query(two_hop("P3")).collect())
+    assert with_rows == without_rows <= 3
+    assert _jobs(spark, lambda: kg.query(top_k).collect()) <= 2
+    assert [tuple(r) for r in kg.query(two_hop("P1")).collect()] == [
+        ("M1", "Noir"), ("M2", "Drama"),
+    ]
+    assert kg.query(two_hop("P3")).collect() == []
+    assert [tuple(r) for r in kg.query(top_k).collect()] == [
+        ("P1", 2), ("P2", 1),
+    ]
+    # the props-free two-hop reads the nodes table once, for its anchor
+    plan = kg.query(two_hop("P1"))._jdf.queryExecution().optimizedPlan()
+    assert len(re.findall(r"Relation \[node_id#", plan.toString())) == 1
+    kg.delete()
+
+
+def test_sessions_skip_call_site_capture(spark):
+    """`get_spark` (which built the `spark` fixture) turns off PySpark's
+    DataFrame call-site capture, which costs 13-24 py4j round trips per
+    `F.col`/`.alias`/comparison and was half of planning a Cypher read."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == (
+        "false"
+    )
+    assert not is_debugging_enabled()
