@@ -27,6 +27,24 @@ current version. Until then, a reader of the whole directory would see two
 versions, so the graph's readers (`GraphTable.frame`, and a build's resume
 of 06/07 in `RunContext.run_stage`) read the files the pointer names.
 
+A versioned table's read handle (`GraphTable.frame`) is built once per
+version and reused while the pointer names it. It takes one of two forms,
+chosen from the version's row count, which its files' footers carry:
+
+- at most `LOCAL_ROWS` rows: a local relation over the version's rows,
+  read with pyarrow (`session.local_frame`). Spark's optimizer evaluates a
+  filter and projection over it on the driver (`ConvertToLocalRelation`),
+  so a point read runs no Spark job, and `run_cypher` plans the joins and
+  aggregates of a read whose inputs are all local over one partition, so a
+  two-hop or a top-k runs as one job with no broadcast and no shuffle;
+- more rows, or a table on the whole-file storage route (where a footer
+  read would copy the file): a parquet scan of the version's files.
+
+The gate exists because a local relation is re-filtered, interpreted, on
+the driver at every optimization, and its rows travel inside the task of
+every job that reads it, so its cost grows with the table while a scan's
+fixed cost does not. A flat table is always scanned.
+
 A directory without a pointer is a flat table as the build writes it
 (`run_pipeline` stage 06/07, `rematerialize`). Spark reads it as any parquet
 directory. The first upsert reads all its rows, so a table that cannot be
@@ -52,7 +70,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from kgforge.storage import Location
+from kgforge.session import local_frame
+from kgforge.storage import Location, whole_files
 
 POINTER = "_kg_table.json"
 FORMAT = 1
@@ -62,6 +81,14 @@ FORMAT = 1
 # read of the flat build table (88 ms), a point read took 121 ms with
 # groups of 230,000 rows, 110 ms with 65,536 and 88 ms with 32,768.
 ROW_GROUP_ROWS = 32768
+# Rows up to which a version is read through a local relation instead of a
+# parquet scan (see the module docstring). Read medians at local[1] on
+# synthetic movie graphs with as many edges as nodes, two runs each (ms;
+# point / top-k / two-hop, scan -> local relation): 2.4k rows 88/164/258 ->
+# 32/99/168, 4.8k 82/157/258 -> 36/109/202, 9.6k 74/145/235 -> 49/148/278,
+# 24k 86/173/265 -> 79/234/480. The two-hop stops gaining between 6.4k
+# and 9.6k rows; the gate stays below that with a margin.
+LOCAL_ROWS = 4096
 # Spark's commit marker and its checksum: the reclaim keeps them, because a
 # build's resume checks the marker before it reuses 06_nodes/07_edges
 _SPARK_MARKERS = ("_SUCCESS", "._SUCCESS.crc")
@@ -184,9 +211,11 @@ class GraphTable:
     # ------------------------------------------------------------ reads
     def frame(self, spark: SparkSession) -> DataFrame | None:
         """The table as a DataFrame with the pinned schema, or None when it
-        does not exist. A versioned table's handle reads the files the
-        pointer names; it is built once per version and reused while that
-        version is current. A flat table is listed afresh by each call."""
+        does not exist. A versioned table's handle reads the version the
+        pointer names, as a local relation or a scan of its files (see the
+        module docstring); it is built once per version and reused while
+        that version is current. A flat table is listed afresh by each
+        call."""
         v = pointed(self.loc)
         if v is None:
             self._handle = None
@@ -194,9 +223,18 @@ class GraphTable:
                 return None
             return spark.read.schema(self.schema).parquet(self.loc.uri)
         if self._handle is None or self._handle[0] != v.files:
-            self._handle = (v.files, spark.read.schema(self.schema).parquet(
-                *(self.loc.join(f).uri for f in v.files)
-            ))
+            small = not whole_files(self.loc) and sum(
+                pq.read_metadata(self.loc.join(f).path,
+                                 filesystem=self.loc.fs).num_rows
+                for f in v.files
+            ) <= LOCAL_ROWS
+            if small:
+                df = local_frame(spark, self.rows(v), self.schema)
+            else:
+                df = spark.read.schema(self.schema).parquet(
+                    *(self.loc.join(f).uri for f in v.files)
+                )
+            self._handle = (v.files, df)
         return self._handle[1]
 
     def snapshot(self) -> Version | None:

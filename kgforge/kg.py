@@ -17,8 +17,11 @@ mismatch (string/number/boolean) -> raise. The graph lives as parquet
 tables under `out_dir` (`06_nodes/`, `07_edges/`). The resumable pipeline
 writes them flat; the MERGE-semantics upserts here keep them as versioned
 tables behind an atomic pointer (graph_table.py), each version rewritten
-on the driver with no Spark job. Every driver-side access resolves `out_dir` once through the Hadoop filesystem
-Spark uses (storage.py).
+on the driver with no Spark job. A small version is read back as a local
+relation, so `query` plans over it run a point read with no Spark job and
+a two-hop or top-k as one (plans/cypher_exec.py). Every driver-side access
+resolves `out_dir` once through the Hadoop filesystem Spark uses
+(storage.py).
 """
 
 from __future__ import annotations
@@ -475,7 +478,9 @@ class KnowledgeGraph:
         table directory raises instead of passing for "no graph yet", so
         an upsert cannot overwrite it. Parquet tables are looked up at the
         resolved out_dir (`GraphTable.frame`: a pointer read, and the
-        version's handle reused while it is current); no Spark job runs."""
+        version's handle, a local relation for a small version and a scan
+        of its files otherwise, reused while it is current); no Spark job
+        runs."""
         if iceberg_name is not None:
             if not self.spark.catalog.tableExists(iceberg_name):
                 return None

@@ -163,7 +163,7 @@ Semantics and scope:
 
 Everything compiles to label-filtered equi-joins + hash aggregation —
 Catalyst reorders/broadcasts them like any relational plan; there is no
-interpreter in the loop at execution time. Two plan shapes keep serving
+interpreter in the loop at execution time. Three plan shapes keep serving
 reads small:
 
 - edge-resolved node variables: when the edge frame carries the KG
@@ -185,6 +185,16 @@ reads small:
   same number of Spark jobs whether or not it returns rows (an anchor
   absent from the graph still ends after its empty broadcast). Unanchored
   reads keep the parallel tail.
+- one-partition plans over local inputs: when both tables are local
+  relations (``DataFrame.isLocal()``; a small graph version is read as one,
+  graph_table.py ``LOCAL_ROWS``), the optimizer evaluates filters and
+  projections over them on the driver, so a point read or an anchor absent
+  from the graph runs no Spark job. Each join coalesces both sides to one
+  partition and joins them by hash (a ``shuffle_hash`` hint), and the tail
+  of every read (DISTINCT, aggregation, ORDER BY) runs in that partition
+  too, so a two-hop or a top-k is one job with no broadcast and no
+  shuffle. File scans and Iceberg tables never take this shape: their
+  split parallelism is worth more than a job's fixed cost.
 """
 
 from __future__ import annotations
@@ -1070,6 +1080,19 @@ def run_cypher(
         pattern_groups.extend(groups)
         all_legs.extend(legs)
 
+    # one-partition plans over local inputs (see the module docstring)
+    local = (
+        nodes is not None and edges is not None
+        and nodes.isLocal() and edges.isLocal()
+    )
+
+    def join(left: DataFrame, right: DataFrame, on, how: str = "inner"
+             ) -> DataFrame:
+        if local:
+            left = left.coalesce(1)
+            right = right.coalesce(1).hint("shuffle_hash")
+        return left.join(right, on=on, how=how)
+
     def node_df(var: str) -> DataFrame:
         label, props = var_specs[var]
         df = nodes
@@ -1226,13 +1249,14 @@ def run_cypher(
         if plan is None:
             plan = e
         else:
-            plan = plan.join(
-                e, on=[f"{v}__id" for v in (leg[0], leg[2]) if v in bound]
+            plan = join(
+                plan, e,
+                on=[f"{v}__id" for v in (leg[0], leg[2]) if v in bound],
             )
         for v in new:
             bound.add(v)
             if v not in resolvable:
-                plan = plan.join(node_df(v), on=f"{v}__id")
+                plan = join(plan, node_df(v), on=f"{v}__id")
         return plan
 
     def assemble(plan: DataFrame, bound: set[str],
@@ -1265,7 +1289,7 @@ def run_cypher(
             for idx, leg in pending:
                 src, dst = leg[0], leg[2]
                 e = leg_df(leg)
-                plan = plan.join(e, on=[f"{src}__id", f"{dst}__id"])
+                plan = join(plan, e, on=[f"{src}__id", f"{dst}__id"])
         return plan
 
     # Node vars resolvable from the edge row. Every writer of the KG edge
@@ -1609,14 +1633,14 @@ def run_cypher(
                 nd = nd.filter(F.col("label") == label)
             for k, v in props.items():
                 nd = nd.filter(F.col("props")[k] == v)
-            sub = sub.join(
-                nd.select(F.col("node_id").alias(f"{var}__id")),
-                on=f"{var}__id",
-                how="left_semi",
+            sub = join(
+                sub, nd.select(F.col("node_id").alias(f"{var}__id")),
+                on=f"{var}__id", how="left_semi",
             )
         keys = [f"{v}__id" for v in dict.fromkeys(bound_eps)]
-        return df.join(
-            sub.select(*keys), on=keys, how="left_anti" if neg else "left_semi"
+        return join(
+            df, sub.select(*keys), on=keys,
+            how="left_anti" if neg else "left_semi",
         )
 
     def apply_where(df: DataFrame, where_texts: list[str],
@@ -1699,11 +1723,11 @@ def run_cypher(
                             f"{v}__id" for v in dict.fromkeys((src, dst))
                             if v in sub_bound
                         ]
-                        sub = sub.join(e, on=join_keys)
+                        sub = join(sub, e, on=join_keys)
                         for v in (src, dst):
                             if v not in sub_bound:
                                 sub_bound.add(v)
-                                sub = sub.join(node_df(v), on=f"{v}__id")
+                                sub = join(sub, node_df(v), on=f"{v}__id")
                         pend.remove(item)
                         progress = True
             if pend or sub_bound != opt_vars:
@@ -1714,8 +1738,9 @@ def run_cypher(
             sub = sub.drop(
                 *[c for v in shared for c in (f"{v}__key", f"{v}__props")]
             )
-            plan = plan.join(
-                sub, on=[f"{v}__id" for v in sorted(shared)], how="left"
+            plan = join(
+                plan, sub, on=[f"{v}__id" for v in sorted(shared)],
+                how="left",
             )
             known_vars |= opt_vars
         return plan
@@ -2782,16 +2807,15 @@ def run_cypher(
                     nd = nd.filter(F.col("label") == label)
                 for pk, pv_ in props.items():
                     nd = nd.filter(F.col("props")[pk] == pv_)
-                sub = sub.join(
-                    nd.select(F.col("node_id").alias(f"{v}__id")),
-                    on=f"{v}__id",
-                    how="left_semi",
+                sub = join(
+                    sub, nd.select(F.col("node_id").alias(f"{v}__id")),
+                    on=f"{v}__id", how="left_semi",
                 )
             name = f"__size{next(size_seq)}"
             deg = sub.groupBy(f"{anchor}__id").agg(
                 F.count("*").cast("long").alias(name)
             )
-            plan = plan.join(deg, on=f"{anchor}__id", how="left").fillna(
+            plan = join(plan, deg, on=f"{anchor}__id", how="left").fillna(
                 {name: 0}
             )
             extra_cols.add(name)
@@ -3199,16 +3223,19 @@ def run_cypher(
             )
 
     if (
-        len(segments) == 1
-        and (ret_is_distinct or order_items)
-        and limit_text is None
-        and anchored(first_var)
+        (ret_is_distinct or order_items or (local and ret_has_aggs))
+        and (local or (
+            len(segments) == 1 and limit_text is None
+            and anchored(first_var)
+        ))
     ):
-        # an anchored read ends in a few rows: DISTINCT and ORDER BY over
-        # one partition need no hash exchange, no range-sampling job and
-        # no range exchange (adaptive execution skips some of those
-        # stages after an empty side, so their job count varied with
-        # the parameter)
+        # the tail over one partition: DISTINCT, aggregation and ORDER BY
+        # there need no hash exchange, no range-sampling job and no range
+        # exchange. Over local inputs every read's tail runs there (the
+        # read is one task anyway); otherwise an anchored read's, which
+        # ends in a few rows (adaptive execution skips some of those
+        # stages after an empty side, so their job count varied with the
+        # parameter)
         plan = plan.coalesce(1)
     out = compile_projection(plan, ret_text, ns, extra_cols)
 

@@ -257,7 +257,9 @@ class RunContext:
         df.write.mode("overwrite").parquet(path)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
-        out = self.spark.read.parquet(path)
+        # read back with the schema just written: inferring it from the
+        # footers would run a job
+        out = self.spark.read.schema(df.schema).parquet(path)
         footer = _footer_counts(self.location.join(name))
         if footer is not None:
             mode = PARTITION_FOOTER

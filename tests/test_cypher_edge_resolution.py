@@ -122,8 +122,10 @@ def _rows(df) -> list:
 
 
 def node_scans(df) -> int:
-    """How many times the optimized plan of `df` scans the nodes table."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    """How many times the plan of `df` reads the nodes table. The analyzed
+    plan is counted: the optimizer folds a local relation and the filters
+    over it into one relation, which no longer shows the table."""
+    plan = df._jdf.queryExecution().analyzed().toString()
     return len(re.findall(r"Relation \[node_id#", plan))
 
 

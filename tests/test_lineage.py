@@ -116,6 +116,45 @@ def test_uri_out_dir_commits_and_resumes(spark, workdir):
         assert rerun.stage_runs(stage) == [ctx.run_id], stage
 
 
+def _jobs(spark, fn) -> int:
+    """Spark jobs `fn()` starts, counted in a fresh job group."""
+    sc = spark.sparkContext
+    group = f"lineage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "stage jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_reads_back_the_schema_it_wrote(spark, workdir):
+    """A fresh stage runs only its write's jobs: its output is read back
+    with the schema it wrote, with no footer-inference job, and that
+    schema is the one Spark infers from the files."""
+    df = spark.range(12, numPartitions=3).select(
+        "id",
+        F.col("id").cast("string").alias("name"),
+        F.create_map(F.lit("k"), F.col("id").cast("string")).alias("props"),
+        F.array(F.col("id"), F.lit(None).cast("long")).alias("ids"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("s"),
+    )
+    ctx = RunContext(spark, workdir)
+    twin = os.path.join(workdir, "twin")
+    write_jobs = _jobs(spark, lambda: df.write.parquet(twin))
+    out = None
+
+    def stage():
+        nonlocal out
+        out = ctx.run_stage("01_x", lambda: df)
+
+    assert _jobs(spark, stage) == write_jobs
+    inferred = spark.read.parquet(ctx.stage_path("01_x"))
+    assert out.schema == inferred.schema
+    assert sorted(out.collect()) == sorted(inferred.collect())
+
+
 def test_empty_input_commits_every_stage_and_resumes(spark, workdir):
     pages, _, _ = corpus_to_spark(spark, generate_corpus(n_pages=4, seed=7))
     onto = movies_ontology()
